@@ -192,19 +192,12 @@ def run_pipeline_bench(spark, n_convs: int, cores: int) -> dict:
         # 2-3x off. Best-of-N is the standard counter.
         best = None
         attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2"))
-        # SPARK_GRAFT_SUBSTAGE=1: diagnostic mode — time the decorate chain
-        # into a noop sink separately from the parquet write+commit, so a
-        # scaling sweep can attribute non-scaling seconds to compute vs
-        # write. Doubles the routed stage's work; pipeline_sec from an
-        # instrumented run is NOT a headline number.
-        substage = os.environ.get("SPARK_GRAFT_SUBSTAGE", "0") == "1"
         for attempt in range(attempts):
             wh = _mkdtemp("bench_wh_run_")
             catalog = Catalog(spark, wh)
             tot0, st0 = _cpu_ticks()
             t0 = time.perf_counter()
-            summary = run_pipeline(spark, df, catalog, config=cfg, run_id=f"bench{attempt}",
-                                   instrument_substages=substage)
+            summary = run_pipeline(spark, df, catalog, config=cfg, run_id=f"bench{attempt}")
             elapsed = time.perf_counter() - t0
             tot1, st1 = _cpu_ticks()
             steal = round(100.0 * (st1 - st0) / max(tot1 - tot0, 1), 2)

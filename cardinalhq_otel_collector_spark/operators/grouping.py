@@ -2,7 +2,6 @@
 
   groupbytraceprocessor  — buffer a whole trace/conversation, emit it as
                            one ordered unit (manifest :249)
-  groupbyattrsprocessor  — regroup rows under a promoted key (:248)
 
 The reference buffers traces in memory with a timeout; the relational
 equivalent is a groupBy + ordered collect_list — one shuffle on the group
@@ -16,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["assemble_ordered", "group_by_attrs", "pivot_counts", "rollup_counts", "ntile_buckets", "percent_rank_scale"]
+__all__ = ["assemble_ordered", "pivot_counts", "rollup_counts", "ntile_buckets", "percent_rank_scale"]
 
 
 def assemble_ordered(
@@ -38,13 +37,6 @@ def assemble_ordered(
             F.transform(ordered, lambda x: x[payload_col]), sep
         ).alias(out_col),
     )
-
-
-def group_by_attrs(df: DataFrame, keys: list[str], num_partitions: int | None = None) -> DataFrame:
-    """groupbyattrsprocessor analogue: co-locate rows sharing the promoted
-    key columns (a repartition, so downstream per-key work is local)."""
-    cols = [F.col(k) for k in keys]
-    return df.repartition(num_partitions, *cols) if num_partitions else df.repartition(*cols)
 
 
 def pivot_counts(

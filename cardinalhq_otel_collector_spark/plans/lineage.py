@@ -57,9 +57,12 @@ class LineageLog:
             for r in self.read().filter(F.col("run_id") == run_id).select("stage").distinct().collect()
         }
 
-    def _append_rows(
-        self, rows: list[tuple[str, str, str | None, int | None, int]]
+    def commit_many(
+        self, run_id: str, stage: str, per_sink_counts: list[tuple[str | None, int]]
     ) -> None:
+        """Record one committed stage: a row per (sink, rows_out) pair; sink
+        None for a stage whose table is not split by sink."""
+        rows = [(run_id, stage, s, None, n) for s, n in per_sink_counts]
         if self.catalog.use_iceberg:
             # Iceberg tables are catalog-tracked: a stray file is invisible
             # without a snapshot commit, so route through the catalog (one
@@ -99,16 +102,3 @@ class LineageLog:
         tmp = os.path.join(path, "." + os.path.basename(final) + ".tmp")
         pq.write_table(table, tmp, compression="zstd")
         os.replace(tmp, final)
-
-    def commit(
-        self,
-        run_id: str,
-        stage: str,
-        rows_out: int,
-        rows_in: int | None = None,
-        sink: str | None = None,
-    ) -> None:
-        self._append_rows([(run_id, stage, sink, rows_in, rows_out)])
-
-    def commit_many(self, run_id: str, stage: str, per_sink_counts: list[tuple[str, int]]) -> None:
-        self._append_rows([(run_id, stage, s, None, n) for s, n in per_sink_counts])

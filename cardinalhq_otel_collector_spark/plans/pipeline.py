@@ -8,7 +8,9 @@ chains, re-expressed as ONE declarative DataFrame plan:
   S4 enrich (broadcast) → S5 route →
   S6 fan-out write (single pass, partitioned by sink) →
   S2' template→cluster dimension table (from the written table, pruned) →
-  S7 per-sink windowed aggregate counts (from the written table, pruned) →
+  S7 per-sink windowed aggregate counts (``interval_aggregate`` over the
+     written table, pruned) →
+  S6m optional per-sink wire-format marshal (from the written table) →
   S8 lineage commit per stage (idempotent resume)
 
 Scale decisions baked in:
@@ -29,17 +31,24 @@ Scale decisions baked in:
 
 from __future__ import annotations
 
-import re
+import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..config import PipelineConfig
-from ..datagen import role_lookup, tool_lookup
+from ..datagen import role_lookup, routing_rules, tool_lookup
 from ..operators.aggregate import interval_aggregate
 from ..operators.enrich import enrich
-from ..operators.fingerprint import attach_clusters, cluster_templates, fingerprint
+from ..operators.fingerprint import (
+    attach_clusters,
+    cluster_templates,
+    fingerprint,
+    mask_template,
+)
 from ..operators.parse import parse_keyvalue
 from ..operators.redact import redact
 from ..operators.route import route
@@ -72,19 +81,6 @@ def slim_facts(df: DataFrame) -> DataFrame:
 ROUTED_TABLE = "routed"
 AGG_TABLE = "sink_aggregates"
 CLUSTERS_TABLE = "template_clusters"
-
-def _tz_hour_aligned(tz: str) -> bool:
-    """True iff date_format-derived p_date/p_hour buckets coincide with
-    epoch-aligned ``window(ts, '1 hour')`` buckets in session timezone
-    ``tz``: UTC aliases or an explicit fixed whole-hour offset. Named
-    regional zones are rejected even when currently whole-hour — DST
-    transitions (fall-back merges two epoch hours into one local bucket)
-    and :30/:45 offsets both break the S7 fast path's bucket equality."""
-    t = tz.strip().upper()
-    if t in ("UTC", "GMT", "Z", "ETC/UTC", "ETC/GMT", "+00:00", "-00:00"):
-        return True
-    return bool(re.fullmatch(r"(?:GMT|UTC)?([+-])(\d{1,2}):00(:00)?", t))
-
 
 STAGE_ROUTED = "routed_write"
 STAGE_CLUSTERS = "clusters_write"
@@ -179,9 +175,16 @@ def run_pipeline(
     fail_after_stage: str | None = None,
     tools: DataFrame | None = None,
     roles: DataFrame | None = None,
-    instrument_substages: bool = False,
 ) -> dict:
-    """Run (or resume) the full pipeline. Returns a summary dict.
+    """Run (or resume) the full pipeline. Returns a summary dict:
+    ``run_id``, ``stages_run``, ``stages_skipped`` and ``timings`` (seconds
+    per stage run, keyed by stage name).
+
+    Every stage goes through one lifecycle (exporter.go:48-66 write, then
+    the internal/notify commit): skip if committed → write the stage's
+    table(s) with per-sink row counts observed on the write job itself →
+    record the counts in ``_lineage`` → honour ``fail_after_stage``, the
+    crash-injection hook for resume tests.
 
     Idempotence contract: sink tables are keyed by the pipeline identity,
     not the run — a stage is (re)written atomically (overwrite) and its
@@ -190,14 +193,22 @@ def run_pipeline(
     mid-run crash + rerun converges to the same sink state as a clean run
     (F5.7 golden; design.md:51 dedup contract).
     """
-    from ..datagen import routing_rules
-
     config = (config or PipelineConfig(rules=routing_rules())).validate()
     run_id = run_id or uuid.uuid4().hex
     lineage = LineageLog(catalog)
     done = lineage.committed_stages(run_id) if resume else set()
+    summary: dict = {"run_id": run_id, "stages_run": [], "stages_skipped": [], "timings": {}}
 
-    import time as _time
+    def stage(name: str, body: Callable[[], list[tuple[str | None, int]]]) -> None:
+        if name in done:
+            summary["stages_skipped"].append(name)
+        else:
+            t0 = time.perf_counter()
+            lineage.commit_many(run_id, name, body())
+            summary["stages_run"].append(name)
+            summary["timings"][name] = round(time.perf_counter() - t0, 3)
+        if name == fail_after_stage:
+            raise RuntimeError(f"injected failure after {name}")
 
     decorated = slim_facts(
         decorate(transcripts, config, tools=tools, roles=roles, cluster=False)
@@ -210,65 +221,37 @@ def run_pipeline(
             F.col("sink"),
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(config.salt_partitions)),
         )
+    routed = add_time_partitions(decorated, granularity=config.partition_granularity)
+    part_cols = ["sink", "p_date"] + (
+        ["p_hour"] if config.partition_granularity in ("hour", "minute") else []
+    ) + (["p_minute"] if config.partition_granularity == "minute" else [])
+    # sink labels are closed over the rule table, so the metric set is static
+    sinks = [r["sink"] for r in config.rules] + [config.default_sink]
 
     # Staged-table design: the routed table is written in ONE pass and then
     # serves as the materialization for every downstream stage (cluster map,
-    # aggregates) via column-pruned parquet reads. At 10^12 rows you cannot
-    # cache the stream in executor memory — the committed table IS the
-    # cache, and re-reads prune to the 2-4 columns each stage needs
+    # aggregates, marshal) via column-pruned parquet reads. At 10^12 rows
+    # you cannot cache the stream in executor memory — the committed table
+    # IS the cache, and re-reads prune to the 2-4 columns each stage needs
     # (SURVEY.md §4 fan-out row: persist vs intermediate table — measured,
     # the table wins: persist cost 62s vs write 7s + pruned re-reads ~2s at
     # sf0.1/local[32]). The template→cluster mapping is deliberately a
     # separate tiny dimension table instead of a column burned into the
     # fact rows: deriving it costs O(distinct templates), joining it back
     # at read time is a broadcast, and re-clustering never rewrites facts.
-    summary: dict = {"run_id": run_id, "stages_run": [], "stages_skipped": [], "timings": {}}
+    # Re-reads take the routed frame's schema: an empty partitioned write
+    # leaves no parquet file to infer one from.
+    def read_routed() -> DataFrame:
+        return catalog.read(ROUTED_TABLE, schema=routed.schema)
 
     # ---- S6: single-pass fan-out write ------------------------------------
-    if STAGE_ROUTED in done:
-        summary["stages_skipped"].append(STAGE_ROUTED)
-    else:
-        _t0 = _time.perf_counter()
-        routed = add_time_partitions(decorated, granularity=config.partition_granularity)
-        part_cols = ["sink", "p_date"] + (
-            ["p_hour"] if config.partition_granularity in ("hour", "minute") else []
-        ) + (["p_minute"] if config.partition_granularity == "minute" else [])
-        # per-sink row counts via observed metrics ON the write job itself —
-        # no second scan of the written table (sink labels are closed over
-        # the rule table, so the metric set is static)
-        from pyspark.sql import Observation
-
-        sinks = [r["sink"] for r in config.rules] + [config.default_sink]
-        obs = Observation()
-        routed = routed.observe(
-            obs, *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
-        )
-        if instrument_substages:
-            # Diagnostic (bench --scaling only, never the default path): run
-            # the identical decorate chain into a noop sink FIRST to time the
-            # scan+parse+route compute alone, so the stage account separates
-            # "CPU that should scale with cores" from "parquet encode + file
-            # commit". Doubles the stage's work — that is the price of the
-            # measurement, and the timed headline run keeps this off.
-            _tc = _time.perf_counter()
-            decorated.write.format("noop").mode("overwrite").save()
-            summary["timings"]["routed_compute"] = round(_time.perf_counter() - _tc, 3)
-        _tw = _time.perf_counter()
-        catalog.write(routed, ROUTED_TABLE, partition_by=part_cols)
-        if instrument_substages:
-            summary["timings"]["routed_write_commit"] = round(_time.perf_counter() - _tw, 3)
-        per_sink = [(s, n) for s, n in obs.get.items() if n > 0]
-        lineage.commit_many(run_id, STAGE_ROUTED, per_sink)
-        summary["stages_run"].append(STAGE_ROUTED)
-        summary["timings"][STAGE_ROUTED] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_ROUTED:
-        raise RuntimeError("injected failure after routed_write")
+    def write_routed():
+        out, obs = _observe_rows(routed, sinks)
+        catalog.write(out, ROUTED_TABLE, partition_by=part_cols)
+        return list(obs.get.items())
 
     # ---- S2 pass 2: template→cluster dimension table -----------------------
-    if STAGE_CLUSTERS in done:
-        summary["stages_skipped"].append(STAGE_CLUSTERS)
-    else:
-        _t0 = _time.perf_counter()
+    def write_clusters():
         # The routed facts already carry ``fingerprint`` (pass 1), so the
         # fact-side work here is ONE hash aggregation: a representative
         # text per fingerprint (min — deterministic). Only those ~|distinct
@@ -277,12 +260,8 @@ def run_pipeline(
         # re-masking all rows (3 regexes × 10^12 texts) would buy nothing.
         # persist() the tiny result: the clustering size-probe and the
         # final join both consume it.
-        from pyspark.storagelevel import StorageLevel
-
-        from ..operators.fingerprint import mask_template
-
         reps = (
-            catalog.read(ROUTED_TABLE)
+            read_routed()
             .select("fingerprint", "text")
             .groupBy("fingerprint")
             .agg(F.min("text").alias("text"))
@@ -292,90 +271,24 @@ def run_pipeline(
             .select("template", "fingerprint")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        mapping = cluster_templates(templates)
-        from pyspark.sql import Observation
-
-        obs_c = Observation()
-        mapping = mapping.select("template", "fingerprint", "cluster_id").observe(
-            obs_c, F.count(F.lit(1)).alias("n")
-        )
-        catalog.write(mapping, CLUSTERS_TABLE)
-        lineage.commit(run_id, STAGE_CLUSTERS, rows_out=obs_c.get["n"])
-        templates.unpersist()
-        summary["stages_run"].append(STAGE_CLUSTERS)
-        summary["timings"][STAGE_CLUSTERS] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_CLUSTERS:
-        raise RuntimeError("injected failure after clusters_write")
+        try:
+            mapping, obs = _observe_rows(
+                cluster_templates(templates).select("template", "fingerprint", "cluster_id")
+            )
+            catalog.write(mapping, CLUSTERS_TABLE)
+        finally:
+            templates.unpersist()
+        return [(None, obs.get["n"])]
 
     # ---- S7: per-sink windowed aggregate counts ----------------------------
-    if STAGE_AGG in done:
-        summary["stages_skipped"].append(STAGE_AGG)
-    else:
-        _t0 = _time.perf_counter()
-        facts_all = catalog.read(ROUTED_TABLE)
-        if (
-            config.agg_interval_seconds == 3600
-            and config.partition_granularity in ("hour", "minute")
-            and _tz_hour_aligned(spark.conf.get("spark.sql.session.timeZone"))
-        ):
-            # Partition-bucket fast path: when the agg interval equals the
-            # write's hour partition granularity, the bucket is already
-            # materialized as partition VALUES (p_date/p_hour, zero IO) —
-            # the parquet scan reads only the conv_id+tool bytes, no
-            # timestamp decode, no window(). Same buckets by construction
-            # ONLY when the session timezone is a fixed whole-hour offset
-            # (gated above): p_date/p_hour are date_format(ts) in the
-            # session tz while window(ts, '1 hour') is epoch-aligned — a
-            # DST fall-back merges two epoch hours into one local bucket
-            # and a :30/:45 offset shifts every boundary, so named
-            # regional zones fall through to the generic path.
-            # NULL-ts rows land in __HIVE_DEFAULT_PARTITION__ on write;
-            # window() silently drops them in the generic path, so the
-            # fast path filters NULL partition values for path equality.
-            # Measured sub-stage account (BENCH.md round-4): the scan-side
-            # stages are memory-bandwidth-bound, so shedding the widest
-            # column is both a throughput and a scaling win.
-            ts_type = facts_all.schema["ts"].dataType
-            aggs = (
-                facts_all.select("sink", "conv_id", "tool", "p_date", "p_hour")
-                .where(F.col("p_date").isNotNull() & F.col("p_hour").isNotNull())
-                .groupBy("sink", "conv_id", "tool", "p_date", "p_hour")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn(
-                    "bucket_start",
-                    # partition-column type inference reads p_hour=09 back
-                    # as INT 9 and may read p_date as DATE — normalize both
-                    F.to_timestamp(
-                        F.concat_ws(
-                            " ",
-                            F.col("p_date").cast("string"),
-                            F.lpad(F.col("p_hour").cast("string"), 2, "0"),
-                        ),
-                        "yyyy-MM-dd HH",
-                    ).cast(ts_type),
-                )
-                .select("sink", "conv_id", "tool", "n", "bucket_start")
-            )
-        else:
-            # generic path: pruned read of the 4 grouping columns
-            facts = facts_all.select("sink", "conv_id", "tool", "ts")
-            aggs = interval_aggregate(
-                facts, keys=["sink", "conv_id", "tool"], interval=config.agg_interval
-            )
-        from pyspark.sql import Observation
-
-        sinks = [r["sink"] for r in config.rules] + [config.default_sink]
-        obs_a = Observation()
-        aggs = aggs.observe(
-            obs_a, *[F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
+    def write_aggregates():
+        facts = read_routed().select("sink", "conv_id", "tool", "ts")
+        aggs, obs = _observe_rows(
+            interval_aggregate(facts, keys=["sink", "conv_id", "tool"], interval=config.agg_interval),
+            sinks,
         )
         catalog.write(aggs, AGG_TABLE, partition_by=["sink"])
-        per_sink = [(s, n) for s, n in obs_a.get.items() if n > 0]
-        lineage.commit_many(run_id, STAGE_AGG, per_sink)
-        summary["stages_run"].append(STAGE_AGG)
-        summary["timings"][STAGE_AGG] = round(_time.perf_counter() - _t0, 3)
-    if fail_after_stage == STAGE_AGG:
-        raise RuntimeError("injected failure after aggregates_write")
+        return list(obs.get.items())
 
     # ---- S6m: optional sink-boundary marshal stage --------------------------
     # exporter.go:48-66 shape (marshal → partition → upload per sub-batch):
@@ -384,36 +297,42 @@ def run_pipeline(
     # by default — a sink that consumes parquet directly needs no marshal.
     # Reads are partition-pruned (sink is the leading partition key of the
     # routed table), so each marshal scans only its own sink's bytes.
-    if config.marshal_sinks:
-        if STAGE_MARSHAL in done:
-            summary["stages_skipped"].append(STAGE_MARSHAL)
-        else:
-            _t0 = _time.perf_counter()
-            from pyspark.sql import Observation
+    def write_marshaled():
+        counts = []
+        for sink, fmt in sorted(config.marshal_sinks.items()):
+            out, obs = _observe_rows(
+                marshal_routed(read_routed().where(F.col("sink") == sink), fmt, sink)
+            )
+            table = f"{MARSHAL_TABLE_PREFIX}{sink}"
+            if fmt == "otlp_proto":
+                # wire bytes: parquet binary column (text can't hold them)
+                catalog.write(out, table, partition_by=["p_date"])
+            else:
+                # line formats: newline-delimited text objects, one leaf
+                # dir per p_date — the upload layout shape
+                out.write.mode("overwrite").partitionBy("p_date").text(catalog.path(table))
+            counts.append((sink, obs.get["n"]))
+        return counts
 
-            per_sink = []
-            for sink, fmt in sorted(config.marshal_sinks.items()):
-                facts = catalog.read(ROUTED_TABLE).where(F.col("sink") == sink)
-                out = marshal_routed(facts, fmt, sink)
-                obs_m = Observation()
-                out = out.observe(obs_m, F.count(F.lit(1)).alias("n"))
-                table = f"{MARSHAL_TABLE_PREFIX}{sink}"
-                if fmt == "otlp_proto":
-                    # wire bytes: parquet binary column (text can't hold them)
-                    catalog.write(out, table, partition_by=["p_date"])
-                else:
-                    # line formats: newline-delimited text objects, one
-                    # leaf dir per p_date — the upload layout shape
-                    (
-                        out.write.mode("overwrite")
-                        .partitionBy("p_date")
-                        .text(catalog.path(table))
-                    )
-                per_sink.append((sink, obs_m.get["n"]))
-            lineage.commit_many(run_id, STAGE_MARSHAL, per_sink)
-            summary["stages_run"].append(STAGE_MARSHAL)
-            summary["timings"][STAGE_MARSHAL] = round(_time.perf_counter() - _t0, 3)
+    stage(STAGE_ROUTED, write_routed)
+    stage(STAGE_CLUSTERS, write_clusters)
+    stage(STAGE_AGG, write_aggregates)
+    if config.marshal_sinks:
+        stage(STAGE_MARSHAL, write_marshaled)
     return summary
+
+
+def _observe_rows(df: DataFrame, sinks: list[str] | None = None) -> tuple[DataFrame, Observation]:
+    """Attach row counts to ``df``'s write job as observed metrics, so they
+    cost no second scan of the written table: one count per label in
+    ``sinks`` (rows whose ``sink`` column holds it), else the total as
+    ``n``. Read ``Observation.get`` after the write."""
+    obs = Observation()
+    if sinks is None:
+        counts = [F.count(F.lit(1)).alias("n")]
+    else:
+        counts = [F.count(F.when(F.col("sink") == s, 1)).alias(s) for s in sinks]
+    return df.observe(obs, *counts), obs
 
 
 def read_routed_with_clusters(catalog: Catalog, sink: str | None = None) -> DataFrame:

@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["build_spark", "stop_spark"]
+__all__ = ["build_spark"]
 
 
 def _submit_master() -> str | None:
@@ -122,7 +122,3 @@ def build_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark(spark: SparkSession) -> None:
-    spark.stop()

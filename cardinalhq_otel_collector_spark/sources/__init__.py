@@ -1,1 +1,1 @@
-"""Sources & sinks: table catalog + testdata loaders."""
+"""Sources & sinks: the table catalog, connectors and committed fixtures."""

@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["Catalog", "add_time_partitions", "validate_compression", "VALID_COMPRESSION"]
 
@@ -184,10 +185,14 @@ class Catalog:
     ) -> None:
         self.write(df, table, partition_by, mode="append", compression=compression)
 
-    def read(self, table: str) -> DataFrame:
+    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """``schema`` skips parquet schema inference, which fails on a table
+        whose write produced no data file (an empty partitioned write);
+        Iceberg tables carry their own schema and ignore it."""
         if self.use_iceberg:
             return self.spark.table(self._ident(table))
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def read_partition(self, table: str, **partition_values: str) -> DataFrame:
         """Partition-pruned read, e.g. read_partition('routed', sink='errors').

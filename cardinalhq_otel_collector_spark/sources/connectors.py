@@ -9,8 +9,9 @@
                      sinks. The reference round-robins per batch; a
                      distributed engine must be deterministic under
                      retries, so rows are assigned by md5(key) mod N —
-                     stable across partitionings, retries, cluster sizes —
-                     and written in ONE partitioned pass, not N scans.
+                     stable across partitionings, retries, cluster sizes;
+                     ``partitionBy("rr_sink")`` then fans the rows out in
+                     ONE write, not N scans.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 
-__all__ = ["failover_write", "round_robin_assign", "round_robin_write"]
+__all__ = ["failover_write", "round_robin_assign"]
 
 
 def failover_write(
@@ -65,15 +66,3 @@ def round_robin_assign(
         .cast("long") % n_ways
     )
     return df.withColumn(out_col, bucket.cast("int"))
-
-
-def round_robin_write(
-    df: DataFrame,
-    catalog: Catalog,
-    table: str,
-    n_ways: int,
-    key_col: str,
-) -> None:
-    """One partitioned write fans rows out to rr_sink=0..N-1 directories —
-    a single scan, not one job per downstream sink."""
-    catalog.write(round_robin_assign(df, n_ways, key_col), table, partition_by=["rr_sink"])

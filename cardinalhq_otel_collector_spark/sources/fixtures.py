@@ -26,8 +26,6 @@ __all__ = [
     "NEARDUP_FIXTURE",
     "transcripts_fixture_df",
     "neardup_fixture_df",
-    "write_transcript_fixture",
-    "write_neardup_fixture",
 ]
 
 FIXTURE_DIR = os.environ.get(
@@ -80,27 +78,3 @@ def neardup_fixture_df(spark: SparkSession) -> DataFrame:
     ]
     extra = spark.createDataFrame(extra_rows, schema=base.schema)
     return base.unionByName(extra)
-
-
-def _write_single_parquet(df: DataFrame, path: str) -> str:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    pdf = df.toPandas()
-    # Spark cannot read parquet TIMESTAMP(NANOS); store micros.
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path, compression="zstd")
-    return path
-
-
-def write_neardup_fixture(spark: SparkSession, path: str | None = None) -> str:
-    return _write_single_parquet(neardup_fixture_df(spark), path or NEARDUP_FIXTURE)
-
-
-def write_transcript_fixture(spark: SparkSession, path: str | None = None) -> str:
-    """(Re)write the committed fixture as a SINGLE parquet file via
-    pyarrow (a Spark directory-write commits part files + _SUCCESS —
-    noisy to version; one file keeps the repo clean and lets DuckDB
-    ``read_parquet`` it directly)."""
-    return _write_single_parquet(transcripts_fixture_df(spark), path or TRANSCRIPTS_FIXTURE)

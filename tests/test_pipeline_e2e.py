@@ -134,30 +134,81 @@ def test_lineage_consistency(pipeline_state):
         assert per_sink[("routed_write", sink)] == n
 
 
-def test_idempotent_resume(spark, transcripts_df, tmp_path, warehouse):
-    """Crash after the routed write, resume with the same run_id → final
-    state identical to a clean run; routed stage not re-executed."""
+STAGES = ["routed_write", "clusters_write", "aggregates_write", "marshal_write"]
+MARSHAL_SINKS = {"errors": "sumo_ic", "default": "body", "search_tools": "otlp_proto"}
+# one table each stage writes, to check a crashed run's mid-run state
+_STAGE_TABLE = dict(zip(STAGES, (ROUTED_TABLE, CLUSTERS_TABLE, AGG_TABLE, "marshaled_errors")))
+
+
+def _marshal_config() -> PipelineConfig:
+    return PipelineConfig(rules=routing_rules(), marshal_sinks=dict(MARSHAL_SINKS)).validate()
+
+
+def _sink_frames(spark, catalog, like=None) -> dict:
+    """Every table a ``_marshal_config`` run writes. ``like`` lends the
+    schemas of its parquet tables: an empty partitioned write leaves no
+    file to infer one from."""
+    def parquet(table):
+        if like is None:
+            return catalog.read(table)
+        return spark.read.schema(like.read(table).schema).parquet(catalog.path(table))
+
+    frames = {t: parquet(t) for t in (ROUTED_TABLE, CLUSTERS_TABLE, AGG_TABLE,
+                                      "marshaled_search_tools")}
+    for table in ("marshaled_errors", "marshaled_default"):
+        frames[table] = spark.read.text(catalog.path(table))
+    return frames
+
+
+def _rows(frames: dict) -> dict:
+    return {t: sorted(map(tuple, df.collect()), key=repr) for t, df in frames.items()}
+
+
+@pytest.fixture(scope="module")
+def clean_marshal_run(spark, transcripts_df, tmp_path_factory):
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
 
-    with pytest.raises(RuntimeError, match="injected failure"):
+    catalog = Catalog(spark, str(tmp_path_factory.mktemp("wh_clean")))
+    run_pipeline(spark, transcripts_df, catalog, config=_marshal_config(), run_id="clean")
+    return catalog, _rows(_sink_frames(spark, catalog))
+
+
+@pytest.mark.parametrize("crash_after", STAGES)
+def test_idempotent_resume(spark, transcripts_df, warehouse, clean_marshal_run, crash_after):
+    """Crash after any stage, resume with the same run_id → exactly the
+    later stages run, and the final state equals a clean run's."""
+    cfg = _marshal_config()
+    with pytest.raises(RuntimeError, match=f"injected failure after {crash_after}"):
         run_pipeline(
-            spark, transcripts_df, warehouse, run_id="run-x",
-            fail_after_stage="routed_write",
+            spark, transcripts_df, warehouse, config=cfg, run_id="run-x",
+            fail_after_stage=crash_after,
         )
-    # mid-run state: routed committed, aggregates absent
-    assert warehouse.exists(ROUTED_TABLE)
-    assert not warehouse.exists(AGG_TABLE)
+    k = STAGES.index(crash_after) + 1
+    # mid-run state: the stages up to the crash wrote, the later ones not
+    for st in STAGES:
+        assert warehouse.exists(_STAGE_TABLE[st]) == (st in STAGES[:k]), st
 
-    summary = run_pipeline(spark, transcripts_df, warehouse, run_id="run-x", resume=True)
-    assert summary["stages_skipped"] == ["routed_write"]
-    assert summary["stages_run"] == ["clusters_write", "aggregates_write"]
+    summary = run_pipeline(spark, transcripts_df, warehouse, config=cfg, run_id="run-x", resume=True)
+    assert summary["stages_skipped"] == STAGES[:k]
+    assert summary["stages_run"] == STAGES[k:]
+    assert _rows(_sink_frames(spark, warehouse)) == clean_marshal_run[1]
 
-    clean = Catalog(spark, str(tmp_path / "clean"))
-    run_pipeline(spark, transcripts_df, clean, run_id="run-y")
-    for table in (ROUTED_TABLE, AGG_TABLE, CLUSTERS_TABLE):
-        a = sorted(map(tuple, warehouse.read(table).drop("p_date", "p_hour").collect()))
-        b = sorted(map(tuple, clean.read(table).drop("p_date", "p_hour").collect()))
-        assert a == b
+
+def test_empty_input_completes_and_resumes(spark, transcripts_df, warehouse, clean_marshal_run):
+    """A 0-row input runs every stage: downstream stages re-read the empty
+    routed table with its known schema, each stage still commits a lineage
+    row, and a same-run_id resume therefore runs nothing."""
+    empty = spark.createDataFrame([], transcripts_df.schema)
+    cfg = _marshal_config()
+    summary = run_pipeline(spark, empty, warehouse, config=cfg, run_id="empty")
+    assert summary["stages_run"] == STAGES
+    assert LineageLog(warehouse).committed_stages("empty") == set(STAGES)
+    frames = _sink_frames(spark, warehouse, like=clean_marshal_run[0])
+    assert {t: df.count() for t, df in frames.items()} == dict.fromkeys(frames, 0)
+
+    again = run_pipeline(spark, empty, warehouse, config=cfg, run_id="empty", resume=True)
+    assert again["stages_run"] == []
+    assert again["stages_skipped"] == STAGES
 
 
 def test_rerun_same_run_id_is_noop(spark, transcripts_df, warehouse):
@@ -170,11 +221,10 @@ def test_rerun_same_run_id_is_noop(spark, transcripts_df, warehouse):
 
 
 def test_hour_partition_agg_fast_path_matches_window_agg(spark, tmp_path):
-    """S7 fast path: with hour partition granularity and a 1-hour agg
-    interval, the aggregate is computed from partition VALUES (p_date,
-    p_hour) without decoding ts. Must equal window(ts, '1 hour') exactly —
-    including across a midnight boundary (p_date changes under the same
-    run) and for the bucket containing the last event."""
+    """S7 under the hour layout with a 1-hour agg interval: the per-sink
+    aggregate equals window(ts, '1 hour') over the written routed table
+    exactly — including across a midnight boundary (p_date changes under
+    the same run) and for the bucket containing the last event."""
     from datetime import datetime, timedelta
 
     from cardinalhq_otel_collector_spark.operators.aggregate import interval_aggregate
@@ -236,7 +286,7 @@ def test_lineage_commit_survives_crashed_partial_write(spark, warehouse):
     import os
 
     lineage = LineageLog(warehouse)
-    lineage.commit("crash-run", "routed_write", rows_out=10)
+    lineage.commit_many("crash-run", "routed_write", [(None, 10)])
     path = warehouse.path("_lineage")
     # simulate a crash mid-write: a truncated dot-prefixed temp left behind
     with open(os.path.join(path, ".part-deadbeef.parquet.tmp"), "wb") as f:
@@ -260,14 +310,7 @@ def test_marshal_sink_stage_e2e(spark, transcripts_df, tmp_path):
     )
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
 
-    cfg = PipelineConfig(
-        rules=routing_rules(),
-        marshal_sinks={
-            "errors": "sumo_ic",
-            "default": "body",
-            "search_tools": "otlp_proto",
-        },
-    ).validate()
+    cfg = _marshal_config()
     catalog = Catalog(spark, str(tmp_path / "wh_marshal"))
     summary = run_pipeline(spark, transcripts_df, catalog, config=cfg, run_id="m1")
     assert "marshal_write" in summary["stages_run"]
@@ -314,23 +357,14 @@ def test_marshal_sink_stage_e2e(spark, transcripts_df, tmp_path):
 
 
 def test_s7_fast_path_requires_hour_aligned_timezone(spark, tmp_path):
-    """ADVICE round-4: p_date/p_hour follow the SESSION tz while
-    window(ts,'1 hour') is epoch-aligned, so the partition-value fast path
-    must fall back to the generic path under a non-whole-hour-offset zone
-    (Asia/Kolkata = +5:30 shifts every bucket boundary by 30 min). The
-    aggregate must equal window() regardless of session timezone."""
+    """p_date/p_hour follow the SESSION tz while S7's window(ts, '1 hour')
+    is epoch-aligned: under a non-whole-hour-offset zone (Asia/Kolkata =
+    +5:30 shifts every partition boundary by 30 min) the aggregate must
+    still equal window() with epoch-aligned buckets."""
     from datetime import datetime, timedelta
 
     from cardinalhq_otel_collector_spark.operators.aggregate import interval_aggregate
-    from cardinalhq_otel_collector_spark.plans.pipeline import _tz_hour_aligned
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
-
-    # unit matrix for the gate itself
-    for tz in ("UTC", "GMT", "Etc/UTC", "+05:00", "-08:00", "GMT+3:00"):
-        assert _tz_hour_aligned(tz), tz
-    for tz in ("Asia/Kolkata", "Asia/Kathmandu", "America/New_York",
-               "Europe/Berlin", "+05:30"):
-        assert not _tz_hour_aligned(tz), tz
 
     base = datetime(2026, 3, 1, 22, 15, 0)
     rows = [
@@ -363,8 +397,8 @@ def test_s7_fast_path_requires_hour_aligned_timezone(spark, tmp_path):
             ).select("sink", "conv_id", "n", "bucket_start").collect())
         )
         assert got == expected
-        # the +5:30 layout genuinely splits epoch hours across p_hour values,
-        # so equality above proves the generic path ran, not the fast path
+        # the +5:30 layout splits epoch hours across p_hour values; the
+        # buckets still follow ts, not the partition values
         hours = {
             r["bucket_start"].minute for r in catalog.read(AGG_TABLE).collect()
         }
@@ -374,9 +408,9 @@ def test_s7_fast_path_requires_hour_aligned_timezone(spark, tmp_path):
 
 
 def test_s7_fast_path_drops_null_ts_like_window(spark, tmp_path):
-    """ADVICE round-4: NULL-ts rows land in __HIVE_DEFAULT_PARTITION__ on
-    write; window() silently drops them, so the fast path must too — both
-    paths agree that null-timestamp rows produce no aggregate group."""
+    """NULL-ts rows land in __HIVE_DEFAULT_PARTITION__ on write and S7's
+    window() drops them: a null-timestamp turn produces no aggregate
+    group."""
     from datetime import datetime
 
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
