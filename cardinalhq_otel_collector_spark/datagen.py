@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 __all__ = [
     "transcripts",
     "tool_lookup",
@@ -166,7 +168,7 @@ def tool_lookup(spark: SparkSession) -> DataFrame:
         ("python", "compute", "team-runtime", True),
         ("calculator", "compute", "team-runtime", False),
     ]
-    return spark.createDataFrame(rows, "tool string, tool_category string, tool_owner string, valid boolean")
+    return local_frame(spark, rows, "tool string, tool_category string, tool_owner string, valid boolean")
 
 
 def role_lookup(spark: SparkSession) -> DataFrame:
@@ -177,7 +179,7 @@ def role_lookup(spark: SparkSession) -> DataFrame:
         ("system", "system"),
         ("tool", "machine"),
     ]
-    return spark.createDataFrame(rows, "role string, role_kind string")
+    return local_frame(spark, rows, "role string, role_kind string")
 
 
 def routing_rules() -> list[dict]:
@@ -211,7 +213,7 @@ def summaries_fixture(spark: SparkSession) -> DataFrame:
         "quantiles array<struct<q:double,v:double>>, "
         "ts_ms long, start_ts_ms long"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _main() -> None:

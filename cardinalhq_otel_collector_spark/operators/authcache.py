@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "AuthDenied",
     "TransientAuthError",
@@ -135,8 +137,8 @@ class AuthCache:
             for e in self._cache.values()
             if e.expiry >= now
         ]
-        return spark.createDataFrame(
-            rows, "api_key string, customer_id string, customer_name string, valid boolean"
+        return local_frame(
+            spark, rows, "api_key string, customer_id string, customer_name string, valid boolean"
         )
 
     def enrich(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "mask_template",
     "fingerprint",
@@ -260,13 +262,9 @@ def components_from_bands(
     probe = bands.limit(driver_max_rows + 1).collect()
     if len(probe) <= driver_max_rows:
         # probe returned the COMPLETE band set (limit k+1 yielding ≤k rows)
-        pairs = _driver_components(probe)
-        mapping = spark.createDataFrame(
-            pairs or [(0, 0)], "fingerprint long, cluster_id long"
+        return F.broadcast(
+            local_frame(spark, _driver_components(probe), "fingerprint long, cluster_id long")
         )
-        if not pairs:
-            mapping = mapping.limit(0)
-        return F.broadcast(mapping)
     return _propagate_min_labels(bands).withColumnRenamed("label", "cluster_id")
 
 

@@ -182,7 +182,9 @@ def otlp_json_logs(
     """OTLP/JSON byte shape (plog.JSONMarshaler via marshaler.go:53-58):
     one resourceLogs envelope per row — attributes as [{key, value:
     {stringValue}}] lists, timeUnixNano as a decimal STRING (the OTLP JSON
-    mapping renders 64-bit ints as strings)."""
+    mapping renders 64-bit ints as strings). A ``ts`` outside
+    1677-09-21..2262-04-11 has no int64 nanosecond value: the job fails
+    with ``ARITHMETIC_OVERFLOW`` rather than write a wrapped number."""
 
     def kvlist(d: dict[str, Column]) -> Column:
         return F.array(
@@ -341,11 +343,12 @@ def _pb_kv(key: str, value: str) -> bytes:
 
 def _encode_logsdata(ts_nanos, body, res_items, attr_items) -> bytes:
     rec = bytearray()
-    # time_unix_nano = 1, fixed64 (wire type 1), little-endian. NULL or 0
-    # omits the field — proto3 zero-value absence, the same bytes the
-    # generated gogoproto marshalers emit and the NULL tolerance the json
-    # branch already has. Pre-epoch timestamps wrap two's-complement like
-    # Go's uint64 conversion (pdata stores time_unix_nano as uint64).
+    # time_unix_nano = 1, fixed64 (wire type 1), little-endian. 0 (a NULL
+    # ts arrives as 0) omits the field — proto3 zero-value absence, the
+    # same bytes the generated gogoproto marshalers emit and the NULL
+    # tolerance the json branch already has. Pre-epoch timestamps wrap
+    # two's-complement like Go's uint64 conversion (pdata stores
+    # time_unix_nano as uint64).
     if ts_nanos:
         rec += _pb_varint((1 << 3) | 1) + (
             int(ts_nanos) & 0xFFFFFFFFFFFFFFFF
@@ -375,7 +378,11 @@ def otlp_proto_logs(
     proto branch of marshaler.go:42-71, previously the only reference
     marshaler without a byte port here. Attr values are stringified
     (AnyValue.string_value), keys sorted at plan time; NULL body/values
-    are omitted (proto3 field absence)."""
+    are omitted (proto3 field absence), and so is a NULL ``ts``.
+
+    A ``ts`` outside 1677-09-21..2262-04-11 has no int64 nanosecond
+    value (Go leaves ``UnixNano`` undefined there): the job fails with
+    ``ARITHMETIC_OVERFLOW`` rather than write wrapped bytes."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -384,18 +391,12 @@ def otlp_proto_logs(
 
     @pandas_udf("binary")  # no type hints: SCALAR eval (pd is local here)
     def enc(ts_nanos, body_s, res_vals, attr_vals):
-        # arrow→pandas coerces a null-bearing int64 column to float64
-        # (NaN for nulls), which both raises on int(NaN) and silently
-        # degrades >2^53 ns values elsewhere in the SAME batch; nullable
-        # Int64 preserves nulls and full precision.
-        ts_nanos = ts_nanos.astype("Int64")
         out = []
         for i in range(len(ts_nanos)):
-            t = ts_nanos.iloc[i]
             b = body_s.iloc[i]
             out.append(
                 _encode_logsdata(
-                    None if pd.isna(t) else int(t),
+                    int(ts_nanos.iloc[i]),
                     None if b is None else str(b),
                     zip(res_keys, res_vals.iloc[i]),
                     zip(attr_keys, attr_vals.iloc[i]),
@@ -410,7 +411,9 @@ def otlp_proto_logs(
             return F.array().cast("array<string>")
         return F.array(*[(d or {})[k].cast("string") for k in keys])
 
-    ts_nanos = (F.unix_micros(ts.cast("timestamp")) * 1000).cast("long")
+    # NULL → 0 in the JVM: arrow→pandas turns a null-bearing int64 column
+    # into float64, which would round every >2^53 ns value in the batch
+    ts_nanos = F.coalesce(F.unix_micros(ts.cast("timestamp")) * 1000, F.lit(0))
     return df.withColumn(
         out_col,
         enc(

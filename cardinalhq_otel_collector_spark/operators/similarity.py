@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "norms",
     "cosine_scores",
@@ -356,7 +358,8 @@ def ivf_centroids(
         .limit(k)
         .collect()
     )
-    seeds = spark.createDataFrame(
+    seeds = local_frame(
+        spark,
         [(r["_id"], cid) for cid, r in enumerate(seed_rows)],
         corpus.select(id_col).schema.add("cid", "integer"),
     )
@@ -378,7 +381,7 @@ def ivf_centroids(
             )
         )
         rows = upd.collect()  # k·dim values — bounded control-plane state
-        cent = spark.createDataFrame(rows, "cid int, i int, c double")
+        cent = local_frame(spark, rows, "cid int, i int, c double")
     return cent
 
 

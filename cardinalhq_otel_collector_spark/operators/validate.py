@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = ["transcript_integrity", "k_anonymity_violations", "coverage_gaps", "cohen_kappa", "fk_violations", "confusion_matrix"]
 
 
@@ -159,8 +161,8 @@ def cohen_kappa(
         kappa_ppm = q if num >= 0 else -q
     else:
         kappa_ppm = None
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(n_total, agree, int(chance), int(num), int(den), kappa_ppm)],
         "n_pairs long, n_agree long, chance_mass long, kappa_num long, "
         "kappa_den long, kappa_ppm long",

@@ -31,6 +31,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.catalog import Catalog
 
 __all__ = ["LineageLog"]
@@ -48,7 +49,7 @@ class LineageLog:
 
     def read(self) -> DataFrame:
         if not self.catalog.exists(LINEAGE_TABLE):
-            return self.catalog.spark.createDataFrame([], _SCHEMA + ", committed_at timestamp")
+            return local_frame(self.catalog.spark, [], _SCHEMA + ", committed_at timestamp")
         return self.catalog.read(LINEAGE_TABLE)
 
     def committed_stages(self, run_id: str) -> set[str]:
@@ -67,7 +68,7 @@ class LineageLog:
             # Iceberg tables are catalog-tracked: a stray file is invisible
             # without a snapshot commit, so route through the catalog (one
             # tiny append job; the snapshot IS the post-commit notification)
-            df = self.catalog.spark.createDataFrame(rows, _SCHEMA).withColumn(
+            df = local_frame(self.catalog.spark, rows, _SCHEMA).withColumn(
                 "committed_at", F.current_timestamp()
             )
             self.catalog.append(df, LINEAGE_TABLE)

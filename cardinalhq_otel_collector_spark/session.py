@@ -12,10 +12,12 @@ pandas-UDF paths, and shuffle partitions sized to the local core count
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-__all__ = ["build_spark"]
+__all__ = ["build_spark", "local_frame"]
 
 
 def _submit_master() -> str | None:
@@ -122,3 +124,28 @@ def build_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side table (lookups, cluster maps, control-plane
+    rows) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``
+    over a pickled Python RDD, so every job that reads it waits on Python
+    worker tasks. A ``pyarrow.Table`` is shipped to the JVM once and plans
+    as ``LocalTableScan`` whatever ``spark.sql.execution.arrow.pyspark.
+    enabled`` says; an empty ``rows`` gives an empty table of the schema.
+    ``rows`` are positional tuples (``Row`` objects included) in schema
+    order. A naive datetime is read as UTC (the list path reads it in the
+    host's zone), so pass aware ones.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

@@ -3,8 +3,10 @@
 
 from __future__ import annotations
 
+import datetime
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from cardinalhq_otel_collector_spark.operators.marshal import (
@@ -294,7 +296,8 @@ def test_otlp_proto_null_and_extreme_timestamps(spark):
     a pre-epoch ts must not raise OverflowError. Contract: NULL/zero
     time_unix_nano is an OMITTED field (proto3 zero absence → decodes as
     0), negative nanos wrap like Go's uint64 conversion, and full int64
-    ns precision survives alongside a null in one batch."""
+    ns precision survives alongside a null in one batch (coalesce(1) puts
+    the three rows in one Arrow batch)."""
     import datetime
 
     from cardinalhq_otel_collector_spark.operators.marshal import (
@@ -307,7 +310,7 @@ def test_otlp_proto_null_and_extreme_timestamps(spark):
         (2, "b", datetime.datetime(2026, 1, 2, 3, 4, 5, 123457)),  # needs >2^53 ns
         (3, "c", datetime.datetime(1969, 12, 31, 23, 59, 59)),  # pre-epoch
     ]
-    df = spark.createDataFrame(rows, "id int, body string, ts timestamp")
+    df = spark.createDataFrame(rows, "id int, body string, ts timestamp").coalesce(1)
     out = {
         r["id"]: parse_otlp_proto_logs(bytes(r["otlp_proto"]))
         for r in otlp_proto_logs(df, body=F.col("body"), ts=F.col("ts")).collect()
@@ -317,3 +320,21 @@ def test_otlp_proto_null_and_extreme_timestamps(spark):
     assert out[2]["ts_nanos"] == 1767323045123457000
     # -1_000_000_000 ns wraps to 2^64 - 1e9 (uint64 two's complement)
     assert out[3]["ts_nanos"] == (1 << 64) - 1_000_000_000
+
+
+@pytest.mark.parametrize("marshal", ["otlp_proto_logs", "otlp_json_logs"])
+@pytest.mark.parametrize(
+    "ts",
+    [datetime.datetime(1, 1, 1), datetime.datetime(2262, 4, 12)],
+    ids=["year_1", "after_2262_04_11"],
+)
+def test_otlp_out_of_range_ts_raises(spark, marshal, ts):
+    """A ts with no int64 epoch-nanosecond value (outside
+    1677-09-21..2262-04-11; Go's UnixNano is undefined there) fails the
+    job with ARITHMETIC_OVERFLOW instead of writing wrapped bytes."""
+    from cardinalhq_otel_collector_spark.operators import marshal as M
+
+    df = spark.createDataFrame([("a", ts)], "body string, ts timestamp")
+    out = getattr(M, marshal)(df, body=F.col("body"), ts=F.col("ts"))
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        out.collect()

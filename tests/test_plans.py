@@ -3,7 +3,8 @@ actual executed plans (SURVEY.md §4):
 
   * filters/projection reach the parquet scan (PushedFilters/ReadSchema)
   * lookup joins go broadcast, never shuffle the fact stream
-  * the decorate chain stays whole-stage-codegen JVM (no Python nodes)
+  * the decorate chain stays whole-stage-codegen JVM (no Python nodes),
+    and driver-built tables are LocalTableScans, not Python-RDD scans
   * partitioned reads prune to one sink directory
 """
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from cardinalhq_otel_collector_spark.config import PipelineConfig
 from cardinalhq_otel_collector_spark.datagen import routing_rules, tool_lookup
 from cardinalhq_otel_collector_spark.operators.enrich import enrich
+from cardinalhq_otel_collector_spark.operators.fingerprint import cluster_templates, fingerprint
 from cardinalhq_otel_collector_spark.plans.pipeline import ROUTED_TABLE, decorate, run_pipeline
 
 
@@ -45,6 +47,22 @@ def test_decorate_chain_is_jvm_only(spark, transcripts_df):
     df.write.format("noop").mode("overwrite").save()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in final
+    # a table built from a Python list scans a pickled Python RDD: every
+    # job that reads it waits on Python worker tasks
+    assert "ExistingRDD" not in final
+
+
+def test_cluster_map_is_local_relation(spark):
+    """The driver union-find's cluster map joins back as a LocalTableScan,
+    so the clusters write starts no Python worker."""
+    texts = spark.range(60).select(
+        F.concat(F.lit("user "), F.col("id"), F.lit(" logged in from host-"), F.col("id") % 4)
+        .alias("text")
+    )
+    out = cluster_templates(fingerprint(texts).select("template", "fingerprint").distinct())
+    plan = _plan(out)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "Python" not in plan
 
 
 def test_routed_read_prunes_to_sink_partition(spark, transcripts_df, warehouse):
