@@ -12,8 +12,9 @@ order-dependent; a distributed engine must not be, so this is a
           Pure expressions, no shuffle beyond what downstream needs.
 
   pass 2 (distinct templates only): char-trigram MinHash over the
-          *distinct* template strings, band-bucket LSH (12 hashes in 4
-          bands of 3 — tuned against a reference Drain implementation on
+          template strings, in ONE hash aggregation per fingerprint,
+          band-bucket LSH keyed "<leading token>#<band>#h…" (12 hashes in
+          4 bands of 3 — tuned against a reference Drain implementation on
           loghub-shaped and adversarial corpora, tests/test_drain_parity:
           pairwise-F1 1.0 on both; the previous 4×2 geometry coin-flip
           merged shared-prefix short templates Drain splits, F1 0.81),
@@ -88,61 +89,50 @@ def template_bands(
 ) -> DataFrame:
     """(fingerprint, band-bucket key) rows via char-trigram MinHash LSH.
 
-    All JVM expressions (explode over positions + min-aggregate per seed —
-    deliberately NO higher-order-function lambdas: stacked ``F.transform``
-    lambdas corrupted each other when Catalyst collapsed projections on
-    PySpark 4.1). The recipe is byte-compatible with the previous
-    driver-side implementation: grams = {t[i:i+3] | 0 ≤ i < max(len-2, 1)},
-    hash s = min over grams of md5("<s>|" + gram), band key =
-    "<b>#h_{b·size}#…".
+    ONE hash aggregation per fingerprint (``min`` absorbs duplicate rows,
+    so no ``distinct()``), all JVM expressions — deliberately NO
+    higher-order-function lambdas: stacked ``F.transform`` lambdas
+    corrupted each other when Catalyst collapsed projections on PySpark
+    4.1. Recipe, over sim = template with <num>/<hex>/<id> → '§':
+    grams = {sim[i:i+3] | 0 ≤ i < max(len-2, 1)}, hash s = min over grams
+    of md5("<s>|" + gram), band key = "<tok0>#<b>#h_{b·size}#…" with
+    tok0 = sim.split(" ")[0]. Templates sharing a fingerprint (xxhash64
+    collision) share one signature and get keys under each leading token.
     """
-    tpl = (
-        templates.select("template", "fingerprint")
-        .where(F.col("template").isNotNull())
-        .distinct()
-    )
     # Collapse mask placeholders to ONE character before shingling: masked
     # templates are otherwise full of '<num>' trigrams, which inflate the
     # Jaccard of ANY two number-heavy templates and transitively merge
     # unrelated families (Drain compares token structure, where a wildcard
-    # is one slot — this mirrors that weight).
-    sim_text = F.regexp_replace(F.col("template"), r"<(num|hex|id)>", "§")
-    tpl = tpl.withColumn("_sim", sim_text)
-    pos = F.explode(
-        F.sequence(F.lit(1), F.greatest(F.length("_sim") - 2, F.lit(1)))
-    ).alias("pos")
-    grams = (
-        tpl.select("fingerprint", "_sim", pos)
-        .select(
-            "fingerprint",
-            F.col("_sim").substr(F.col("pos"), F.lit(3)).alias("g"),
-        )
-        .distinct()
+    # is one slot — this mirrors that weight). The repartition spreads the
+    # md5 work over the cores: a small template set otherwise arrives as
+    # one AQE-coalesced partition. On an input already hash-partitioned by
+    # fingerprint (the pipeline's per-fingerprint representatives) Spark
+    # drops it, since the partition count is the shuffle default.
+    n_parts = int(templates.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sim = templates.where(F.col("template").isNotNull()).repartition(n_parts, "fingerprint")
+    sim = sim.select(
+        "fingerprint", F.regexp_replace("template", r"<(num|hex|id)>", "§").alias("_sim")
     )
-    sig = grams.groupBy("fingerprint").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("g")))).alias(f"h{s}")
-            for s in range(n_hashes)
-        ]
-    )
+    pos = F.explode(F.sequence(F.lit(1), F.greatest(F.length("_sim") - 2, F.lit(1)))).alias("pos")
+    gram = F.col("_sim").substr(F.col("pos"), F.lit(3))
     # Drain-faithful structural guard: the parse tree's second level keys
     # on the leading token (after preprocessing), so two templates whose
     # first tokens differ are never candidates — this is what keeps
     # 'Receiving block …' and 'Accepted socket …' apart even when they
     # share a long masked motif (e.g. an <ip>:<port> pattern).
-    first_tok = F.split(F.col("_sim"), " ").getItem(0)
-    keyed = sig.join(
-        tpl.select("fingerprint", first_tok.alias("_tok0")), "fingerprint"
+    sig = sim.select("fingerprint", "_sim", pos).groupBy("fingerprint").agg(
+        F.collect_set(F.split("_sim", " ").getItem(0)).alias("_tok0s"),
+        *[F.min(F.md5(F.concat(F.lit(f"{s}|"), gram))).alias(f"h{s}") for s in range(n_hashes)],
     )
-    n_bands = n_hashes // band_size
-    out: DataFrame | None = None
-    for b in range(n_bands):
-        cols = [F.col("_tok0"), F.lit(str(b))] + [
-            F.col(f"h{b * band_size + j}") for j in range(band_size)
-        ]
-        part = keyed.select("fingerprint", F.concat_ws("#", *cols).alias("band"))
-        out = part if out is None else out.unionByName(part)
-    return out
+    keys = [
+        F.concat_ws(
+            "#", "_tok0", F.lit(str(b)), *[f"h{b * band_size + j}" for j in range(band_size)]
+        )
+        for b in range(n_hashes // band_size)
+    ]
+    return sig.select("*", F.explode("_tok0s").alias("_tok0")).select(
+        "fingerprint", F.explode(F.array(*keys)).alias("band")
+    )
 
 
 def _propagate_min_labels(bands: DataFrame, max_iters: int = 50) -> DataFrame:
@@ -154,6 +144,9 @@ def _propagate_min_labels(bands: DataFrame, max_iters: int = 50) -> DataFrame:
     """
     from pyspark.sql import Observation
 
+    # every round joins the band set: materialise it once, or each round
+    # recomputes the whole MinHash plan
+    bands = bands.localCheckpoint(eager=True)
     labels = (
         bands.select("fingerprint").distinct().withColumn("label", F.col("fingerprint"))
     ).localCheckpoint(eager=True)
@@ -277,8 +270,8 @@ def attach_clusters(df: DataFrame) -> DataFrame:
     is left to AQE: broadcast when the template set is small (the log-
     shaped common case), shuffle join when free text blows it up."""
     distinct = df.select("template", "fingerprint").distinct()
-    clustered = cluster_templates(distinct).select("fingerprint", "cluster_id").distinct()
-    return df.join(clustered, "fingerprint", "left")
+    # the mapping is already one row per fingerprint
+    return df.join(components_from_bands(template_bands(distinct)), "fingerprint", "left")
 
 
 def fingerprint_and_cluster(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -37,7 +37,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..config import PipelineConfig
 from ..datagen import role_lookup, routing_rules, tool_lookup
@@ -258,8 +257,10 @@ def run_pipeline(
         # templates| representatives get re-masked — every text with the
         # same fingerprint masks to the same template by construction, so
         # re-masking all rows (3 regexes × 10^12 texts) would buy nothing.
-        # persist() the tiny result: the clustering size-probe and the
-        # final join both consume it.
+        # Not persisted: the size-probe and the final join each re-run
+        # this small aggregation, which costs less than a cached relation
+        # that keeps every shuffle partition, turning the probe into
+        # serial take jobs and the write into one file per partition.
         reps = (
             read_routed()
             .select("fingerprint", "text")
@@ -269,15 +270,11 @@ def run_pipeline(
         templates = (
             reps.withColumn("template", mask_template(F.col("text")))
             .select("template", "fingerprint")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        try:
-            mapping, obs = _observe_rows(
-                cluster_templates(templates).select("template", "fingerprint", "cluster_id")
-            )
-            catalog.write(mapping, CLUSTERS_TABLE)
-        finally:
-            templates.unpersist()
+        mapping, obs = _observe_rows(
+            cluster_templates(templates).select("template", "fingerprint", "cluster_id")
+        )
+        catalog.write(mapping, CLUSTERS_TABLE)
         return [(None, obs.get["n"])]
 
     # ---- S7: per-sink windowed aggregate counts ----------------------------

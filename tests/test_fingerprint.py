@@ -1,10 +1,15 @@
+import hashlib
+import re
+
 from pyspark.sql import functions as F
 
 from cardinalhq_otel_collector_spark.operators.fingerprint import (
     cluster_templates,
     fingerprint,
     fingerprint_and_cluster,
+    template_bands,
 )
+from cardinalhq_otel_collector_spark.session import local_frame
 
 
 def test_same_pattern_family_shares_fingerprint(spark):
@@ -113,7 +118,7 @@ def test_cluster_scales_past_driver_memory_shape(spark):
     )
     tpl = fingerprint(df).select("template", "fingerprint").distinct()
     # free-text corpora use wider bands (band_size=4 → collision needs 4
-    # matching minhashes) — the log-template default (2) is tuned for
+    # matching minhashes) — the log-template default (3) is tuned for
     # code-site templates and over-merges high-volume random text.
     # driver_max_rows=0 forces the fully distributed path (the size-probe
     # would otherwise route 200k band rows through the bounded driver path).
@@ -144,3 +149,40 @@ def test_fingerprint_no_python_on_row_path(spark, transcripts_df):
     row-level projection contains no Python/Arrow eval nodes."""
     plan = fingerprint(transcripts_df)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "ArrowEval" not in plan
+
+
+def _reference_bands(rows, n_hashes=12, band_size=3):
+    """The documented band recipe in plain Python: mask placeholders
+    collapse to '§', grams = {t[i:i+3] | 0 ≤ i < max(len-2, 1)} over every
+    template of a fingerprint, hash s = min md5("<s>|" + gram), key =
+    "<tok0>#<b>#h…" for each distinct leading token."""
+    sims: dict[int, set[str]] = {}
+    for tpl, fp in rows:
+        if tpl is not None:
+            sims.setdefault(fp, set()).add(re.sub(r"<(num|hex|id)>", "§", tpl))
+    out = set()
+    for fp, texts in sims.items():
+        grams = {t[i:i + 3] for t in texts for i in range(max(len(t) - 2, 1))}
+        h = [min(hashlib.md5(f"{s}|{g}".encode()).hexdigest() for g in grams)
+             for s in range(n_hashes)]
+        for tok0 in {t.split(" ")[0] for t in texts}:
+            for b in range(n_hashes // band_size):
+                out.add((fp, "#".join([tok0, str(b), *h[b * band_size:(b + 1) * band_size]])))
+    return out
+
+
+def test_template_bands_match_reference_recipe(spark):
+    rows = [
+        (None, 1), ("", 2), ("a", 3), ("ab", 4),
+        ("conn <num> from host", 5), ("conn <num> from host", 5),  # duplicate row
+        ("<num><hex> <id>", 6),  # mask tokens only
+        ("héllo wörld <num> 日本語テキスト 🙂", 7),
+        ("  leading spaces", 8),
+        # one fingerprint, two templates (an xxhash64 collision)
+        ("alpha beta gamma", 9), ("zeta beta gamma", 9),
+    ]
+    df = local_frame(spark, rows, "template string, fingerprint long").repartition(3)
+    for n_hashes, band_size in [(12, 3), (8, 4)]:
+        got = {(r["fingerprint"], r["band"])
+               for r in template_bands(df, n_hashes, band_size).collect()}
+        assert got == _reference_bands(rows, n_hashes, band_size)

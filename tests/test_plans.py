@@ -5,6 +5,7 @@ actual executed plans (SURVEY.md §4):
   * lookup joins go broadcast, never shuffle the fact stream
   * the decorate chain stays whole-stage-codegen JVM (no Python nodes),
     and driver-built tables are LocalTableScans, not Python-RDD scans
+  * the S2 MinHash bands are one aggregation (one exchange, no join)
   * partitioned reads prune to one sink directory
 """
 
@@ -13,8 +14,13 @@ from pyspark.sql import functions as F
 from cardinalhq_otel_collector_spark.config import PipelineConfig
 from cardinalhq_otel_collector_spark.datagen import routing_rules, tool_lookup
 from cardinalhq_otel_collector_spark.operators.enrich import enrich
-from cardinalhq_otel_collector_spark.operators.fingerprint import cluster_templates, fingerprint
+from cardinalhq_otel_collector_spark.operators.fingerprint import (
+    cluster_templates,
+    fingerprint,
+    template_bands,
+)
 from cardinalhq_otel_collector_spark.plans.pipeline import ROUTED_TABLE, decorate, run_pipeline
+from cardinalhq_otel_collector_spark.session import local_frame
 
 
 def _plan(df) -> str:
@@ -63,6 +69,15 @@ def test_cluster_map_is_local_relation(spark):
     plan = _plan(out)
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan and "Python" not in plan
+
+
+def test_template_bands_is_one_aggregation(spark):
+    """The MinHash bands are one hash aggregation per fingerprint: no
+    distinct passes, no join back to the templates, no per-band union."""
+    rows = [("conn <num> from host", 1), ("user <id> did x", 2), ("conn <num> from host", 1)]
+    plan = _plan(template_bands(local_frame(spark, rows, "template string, fingerprint long")))
+    assert "Union" not in plan and "Join" not in plan
+    assert plan.count("Exchange") <= 1
 
 
 def test_routed_read_prunes_to_sink_partition(spark, transcripts_df, warehouse):
