@@ -1,21 +1,21 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Default mode (what the driver runs): executes the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], plus the end-to-end transcript pipeline over a
-deterministically generated transcript table scaled to the sf, and prints
-ONE JSON line:
+Default mode (the benchmark contract): times the ``BENCH_QUERIES`` leaves of
+``__spark_entry__.queries()`` over the tables at $SPARK_GRAFT_SF_DIR on
+local[$SPARK_GRAFT_CPUS], then the end-to-end transcript pipeline over a
+generated transcript table scaled to the sf, and prints ONE JSON line:
 
   {"metric": "end_to_end_routed_turns_per_sec", "value": N, "unit": "...",
-   "queries": {...}, "sf": ...}
+   "queries": {...}, "sf": ..., "stage_timings": {...}, ...}
 
-Scaling mode (--scaling): re-executes the pipeline benchmark in two fresh
-subprocesses at different local[k] parallelism (default 8 and 32) over the
-SAME input size and reports throughput at both plus scaling efficiency
-(T_low/T_high)/(k_high/k_low) — the in-sandbox evidence for the N→4N
-executor scaling-efficiency ≥ 0.8 target (BASELINE.md). Results appended
-to BENCH.md.
+--scaling: the N→4N scaling-efficiency target (BASELINE.md). Times the
+pipeline in fresh subprocesses at two local[k] levels, alternating, over
+ONE shared input; prints (T_low/T_high)/(k_high/k_low) from the minimum
+time per level, with every sample.
+
+--skew: salted vs unsalted pipeline on a 1000x hot conversation (appends
+to BENCH.md). Paired A/B timing and per-layer splits live in perfbench/.
 """
 
 from __future__ import annotations
@@ -32,17 +32,15 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-# Bench scratch (input table + warehouses) on tmpfs when available: the
-# sandbox has a single virtual disk, and measuring the pipeline through it
-# confounds compute scaling with disk-writeback noise (observed: stage
-# timings inverting between runs). Real deployments write to object
-# storage with per-executor local NVMe.
+# Bench scratch (input table + warehouses) on tmpfs when available: on a
+# single virtual disk, writeback noise confounds the timings (observed:
+# stage timings inverting between runs).
 _SCRATCH = "/dev/shm/bench" if os.path.isdir("/dev/shm") else None
-if _SCRATCH:
-    os.makedirs(_SCRATCH, exist_ok=True)
 
 
 def _mkdtemp(prefix: str) -> str:
+    if _SCRATCH:
+        os.makedirs(_SCRATCH, exist_ok=True)
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH)
 
 # entry queries timed in the default bench (names from __spark_entry__)
@@ -97,21 +95,12 @@ BENCH_QUERIES = [
 ]
 
 # ~48M turns/sf → sf0.1 ≈ 4.8M turns (FIXTURES.md bench scale)
-TURNS_PER_SF = int(os.environ.get("SPARK_GRAFT_TURNS_PER_SF", "48000000"))
+TURNS_PER_SF = 48_000_000
 AVG_TURNS_PER_CONV = 8.0
-
-# Per-turn validity band for the 1-core side of scaling sweeps, in µs/turn.
-# Measured across rounds 3-5 (BENCH.md): local[1] is normally noise-immune
-# (one core cannot saturate the shared memory bus) and sits at 23.8-28.5
-# µs/turn with CV ~5%; the one observed exception was a severe daytime bus
-# episode that drove it to 66 µs/turn and produced a bogus 1.479
-# "efficiency". A local[1] sample ABOVE this ceiling is a noise artifact
-# and must not be used as the numerator of an efficiency quote (it inflates
-# the ratio); samples below are fine (noise only slows, never speeds).
-# The high-parallelism side needs no band: min-of-N over noisy samples can
-# only UNDER-estimate efficiency, which is the conservative direction.
-LOCAL1_US_PER_TURN_CEILING = float(
-    os.environ.get("SPARK_GRAFT_LOCAL1_US_CEILING", "30.0"))
+# Best-of-N estimators: on a shared host a single timed run can be 2-3x
+# off, and noise only ever slows a run.
+PIPELINE_ATTEMPTS = 2
+QUERY_ATTEMPTS = 3
 
 
 def _cpu_ticks() -> tuple[int, int]:
@@ -135,6 +124,10 @@ def _sf_from_dir(sf_dir: str) -> float:
         return 0.1
 
 
+def _n_convs(sf: float) -> int:
+    return max(100, int(TURNS_PER_SF * sf / AVG_TURNS_PER_CONV))
+
+
 def _build(cores: int):
     from cardinalhq_otel_collector_spark.session import build_spark
 
@@ -147,52 +140,47 @@ def _build(cores: int):
     )
 
 
-def run_pipeline_bench(spark, n_convs: int, cores: int) -> dict:
-    """End-to-end: generate transcripts → decorate → fan-out write → aggs."""
+def _write_transcripts(spark, n_convs: int, partitions: int, path: str) -> None:
+    from cardinalhq_otel_collector_spark.datagen import transcripts
+
+    transcripts(spark, n_convs=n_convs, hot_convs=max(2, n_convs // 1000),
+                partitions=partitions).write.mode("overwrite").parquet(path)
+
+
+def run_pipeline_bench(spark, n_convs: int, cores: int, src: str | None = None) -> dict:
+    """End-to-end: generate transcripts → decorate → fan-out write → aggs.
+
+    ``src``: the shared input of a --scaling run, kept and timed once (the
+    scaling run repeats the subprocesses); else a private input, best of
+    PIPELINE_ATTEMPTS."""
     from cardinalhq_otel_collector_spark.config import PipelineConfig
     from cardinalhq_otel_collector_spark.datagen import routing_rules, transcripts
     from cardinalhq_otel_collector_spark.plans.pipeline import run_pipeline
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
 
-    tmp = _mkdtemp("bench_wh_")
-    src = os.environ.get("SPARK_GRAFT_BENCH_SRC") or _mkdtemp("bench_src_")
-    own_src = "SPARK_GRAFT_BENCH_SRC" not in os.environ
+    own_src = src is None
+    src = src or _mkdtemp("bench_src_")
+    warm_wh = _mkdtemp("bench_warm_")
     try:
-        # Partition granularity is env-switchable for A/B runs. Measured
-        # head-to-head at sf0.1/local[32], same noise window (BENCH.md
-        # round-4 summary): "hour" aligns the layout with the 1-hour agg
-        # interval (S7 partition-value fast path, no ts decode) but the
-        # ~8x leaf-dir multiplication fragments every file the pipeline
-        # writes and reads — 82.4s vs 49.4s end-to-end. Default stays
-        # "day"; the fast path remains for deployments whose layout is
-        # already hourly/minutely (the reference's default is minute).
-        cfg = PipelineConfig(
-            rules=routing_rules(), salt_partitions=2 * cores,
-            partition_granularity=os.environ.get("SPARK_GRAFT_BENCH_GRANULARITY", "day"),
-        )
+        # PipelineConfig's "day" layout: "hour" multiplies the leaf
+        # directories, and so the files written and re-read, about 8x
+        # (BENCH.md round 4: 82.4 s vs 49.4 s at sf0.1).
+        cfg = PipelineConfig(rules=routing_rules(), salt_partitions=2 * cores)
         # untimed warm-up: JIT/codegen compile on a tiny run so the timed
         # run measures steady-state throughput, not JVM warm-up
         warm = transcripts(spark, n_convs=500, partitions=cores)
-        run_pipeline(spark, warm, Catalog(spark, _mkdtemp("bench_warm_")),
-                     config=cfg, run_id="warmup")
+        run_pipeline(spark, warm, Catalog(spark, warm_wh), config=cfg, run_id="warmup")
 
         # materialize the input table UNTIMED: the pipeline under test reads
         # parquet from disk like a real deployment reads Iceberg — generator
-        # CPU must not pollute the throughput number. A shared src dir
-        # (SPARK_GRAFT_BENCH_SRC) lets scaling mode feed the IDENTICAL
-        # physical input to both parallelism levels.
+        # CPU must not pollute the throughput number.
         src_table = os.path.join(src, "transcripts")
         if not os.path.exists(os.path.join(src_table, "_SUCCESS")):
-            transcripts(spark, n_convs=n_convs, hot_convs=max(2, n_convs // 1000),
-                        partitions=4 * cores).write.mode("overwrite").parquet(src_table)
+            _write_transcripts(spark, n_convs, 4 * cores, src_table)
         df = spark.read.parquet(src_table)
         n_turns = df.count()
-        # best of 2: the sandbox host has noisy neighbors (load average >4
-        # observed with zero local processes); a single timed run can be
-        # 2-3x off. Best-of-N is the standard counter.
         best = None
-        attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2"))
-        for attempt in range(attempts):
+        for attempt in range(PIPELINE_ATTEMPTS if own_src else 1):
             wh = _mkdtemp("bench_wh_run_")
             catalog = Catalog(spark, wh)
             tot0, st0 = _cpu_ticks()
@@ -210,26 +198,22 @@ def run_pipeline_bench(spark, n_convs: int, cores: int) -> dict:
                 "steal_pct": steal,
                 "stage_timings": timings}
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(warm_wh, ignore_errors=True)
         if own_src:
             shutil.rmtree(src, ignore_errors=True)
 
 
 def run_query_bench(spark, sf_dir: str) -> dict[str, float]:
-    """Best-of-N per query (N≥3): single-shot per-query numbers on this
-    host are coin flips — round 4's driver bench reported a phantom 2×
-    'regression' on unchanged code (pipeline_route_agg 6.44→12.45s) purely
-    from a noise-window draw. Same min-estimator rationale as the pipeline
-    bench; attempt 0 additionally absorbs per-query plan compilation, so
-    min-of-N is closer to steady-state cost. The full query set is
-    re-interleaved per attempt (not N back-to-back runs of one query) to
-    decorrelate each query's min from any single noise episode."""
+    """Best of QUERY_ATTEMPTS per query. Attempt 0 also absorbs each
+    query's plan compilation, so the minimum is closer to steady-state
+    cost. The full query set is re-interleaved per attempt (not N
+    back-to-back runs of one query) to decorrelate each query's min from
+    any single noise episode."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    attempts = int(os.environ.get("SPARK_GRAFT_QUERY_ATTEMPTS", "3"))
     out: dict[str, float] = {}
-    for _ in range(attempts):
+    for _ in range(QUERY_ATTEMPTS):
         for name in BENCH_QUERIES:
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
@@ -240,13 +224,13 @@ def run_query_bench(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def main_default(sf_dir: str, cores: int, skip_queries: bool = False) -> dict:
+def main_default(sf_dir: str, cores: int, skip_queries: bool = False,
+                 src: str | None = None) -> dict:
     sf = _sf_from_dir(sf_dir)
-    n_convs = max(100, int(TURNS_PER_SF * sf / AVG_TURNS_PER_CONV))
     spark = _build(cores)
     try:
         queries = {} if skip_queries else run_query_bench(spark, sf_dir)
-        pipe = run_pipeline_bench(spark, n_convs, cores)
+        pipe = run_pipeline_bench(spark, _n_convs(sf), cores, src=src)
     finally:
         spark.stop()
     return {
@@ -263,253 +247,60 @@ def main_default(sf_dir: str, cores: int, skip_queries: bool = False) -> dict:
     }
 
 
-def _scaling_valid(sample: dict, low: int) -> bool:
-    """Per-turn-band validity: a 1-core sample above the stable band is a
-    bus-episode artifact and may not serve as the efficiency numerator."""
-    if sample["cores"] != 1 and sample["cores"] != low:
-        return True
-    if sample["cores"] == 1:
-        return sample["us_per_turn"] <= LOCAL1_US_PER_TURN_CEILING
-    return True
-
-
 def main_scaling(sf_dir: str, low: int, high: int, rounds: int = 3) -> dict:
-    """Alternating best-of-N per parallelism level.
+    """Alternating best-of-``rounds`` per parallelism level.
 
-    The sandbox host oversubscribes CPU and memory bandwidth (hypervisor
-    neighbors produce up to 40x swings on identical work, invisible to
-    steal%), so each level is sampled ``rounds`` times, interleaved
-    low/high to decorrelate from noise episodes, and the MINIMUM time per
-    valid sample is used — min is the standard noise-robust estimator of
-    intrinsic cost, and noise on this host only ever slows a run.
-
-    SPARK_GRAFT_SCALING_STATE=<path.json>: accumulate samples across
-    invocations. Noise episodes here last minutes to an hour, so the only
-    way to catch quiet windows at BOTH levels is to spread pairs over
-    hours; the state file lets each invocation contribute `rounds` more
-    alternating pairs and the report quotes best-of-ALL-accumulated with
-    the per-turn-band validity check applied per sample. All accumulated
-    samples must be over the identical physical input (n_turns asserted).
-
-    SPARK_GRAFT_SCALING_SRC=<dir>: persistent shared-input dir; generated
-    once if missing, reused (and kept) otherwise — required when
-    accumulating, so every pair scans the same bytes.
-
-    SPARK_GRAFT_SCALING_PATTERN="1,4,4,4": per-round level sequence
-    (default "low,high" alternating). Weighting draws toward the HIGH
-    level is legitimate under the min-per-level estimator once the low
-    level already holds several valid samples spread across noise
-    windows: min-of-N at each level estimates the quiet-host time, every
-    extra draw at either level only moves its min DOWNWARD (extra low
-    draws make the quote more conservative, extra high draws give more
-    chances to catch the quiet band the noise hides), and the report
-    always states the per-level sample counts so the weighting is
-    auditable. Values must be drawn from {low, high}.
-    """
-    rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", rounds))
-    state_path = os.environ.get("SPARK_GRAFT_SCALING_STATE")
-    persist_src = os.environ.get("SPARK_GRAFT_SCALING_SRC")
-    shared_src = persist_src or _mkdtemp("bench_scaling_src_")
+    Each round runs one low and one high subprocess over the same input;
+    the MINIMUM time per level is the noise-robust estimate of intrinsic
+    cost."""
     sf = _sf_from_dir(sf_dir)
-    n_convs = max(100, int(TURNS_PER_SF * sf / AVG_TURNS_PER_CONV))
-    src_table = os.path.join(shared_src, "transcripts")
-    if not os.path.exists(os.path.join(src_table, "_SUCCESS")):
-        # Pre-generate the shared input at FULL host parallelism (untimed
-        # control-plane work): letting the first local[1] subprocess
-        # generate a 10^7-turn table single-threaded wastes a half hour of
-        # wall clock before the first timed sample.
-        gen_cores = os.cpu_count() or 8
-        spark = _build(gen_cores)
+    src = _mkdtemp("bench_scaling_src_")
+    samples: dict[int, list[dict]] = {low: [], high: []}
+    try:
+        # Generate the shared input once, untimed, at full host
+        # parallelism. 4*low files, not 4*high: fewer, bigger files give
+        # bigger parquet row groups and a faster scan (measured at 20.1M
+        # turns, local[4]: 16-file input 156.2 s vs 4-file 129.2 s).
+        spark = _build(os.cpu_count() or 8)
         try:
-            from cardinalhq_otel_collector_spark.datagen import transcripts
-
-            # partitions = 4*low, NOT 4*high: fewer/bigger files → bigger
-            # parquet row groups → measurably better scan throughput
-            # (measured at 20.1M turns, local[4]: 16-file input 156.2 s vs
-            # 4-file 129.2 s, +21%). Identical input for both levels either
-            # way; this matches the layout the round-2 numbers were taken on.
-            transcripts(
-                spark, n_convs=n_convs, hot_convs=max(2, n_convs // 1000),
-                partitions=4 * low,
-            ).write.mode("overwrite").parquet(src_table)
+            _write_transcripts(spark, _n_convs(sf), 4 * low,
+                               os.path.join(src, "transcripts"))
         finally:
             spark.stop()
+        for _ in range(rounds):
+            for cores in (low, high):
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--sf-dir", sf_dir,
+                     "--cores", str(cores), "--pipeline-only", "--src", src],
+                    capture_output=True, text=True, cwd=REPO, timeout=5400,
+                )
+                if proc.returncode:
+                    raise RuntimeError(
+                        f"local[{cores}] run failed:\n{proc.stderr[-2000:]}")
+                line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
+                samples[cores].append(json.loads(line))
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
 
-    state: dict = {"samples": []}
-    if state_path and os.path.exists(state_path):
-        with open(state_path) as f:
-            state = json.load(f)
-
-    pattern = [
-        int(x)
-        for x in os.environ.get(
-            "SPARK_GRAFT_SCALING_PATTERN", f"{low},{high}"
-        ).split(",")
-    ]
-    assert set(pattern) <= {low, high}, (
-        f"pattern {pattern} may only contain the two levels {low}/{high}")
-    for _ in range(rounds):
-        for cores in pattern:
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores),
-                       SPARK_GRAFT_BENCH_SRC=shared_src,
-                       SPARK_GRAFT_BENCH_ATTEMPTS="1")
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--sf-dir", sf_dir,
-                 "--cores", str(cores), "--pipeline-only"],
-                capture_output=True, text=True, env=env, cwd=REPO, timeout=5400,
-            )
-            line = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")][-1]
-            rec = json.loads(line)
-            rec["cores"] = cores
-            rec["us_per_turn"] = round(1e6 * rec["pipeline_sec"] / rec["n_turns"], 2)
-            rec["at"] = time.strftime("%Y-%m-%d %H:%M:%S")
-            state["samples"].append(rec)
-            if state_path:
-                with open(state_path + ".tmp", "w") as f:
-                    json.dump(state, f, indent=1)
-                os.replace(state_path + ".tmp", state_path)
-    if not persist_src:
-        shutil.rmtree(shared_src, ignore_errors=True)
-
-    samples = {c: [s for s in state["samples"] if s["cores"] == c]
-               for c in (low, high)}
-    n_turns_set = {s["n_turns"] for s in state["samples"]}
-    assert len(n_turns_set) == 1, (
-        f"accumulated samples span different inputs: {n_turns_set}")
-    valid = {c: [s for s in samples[c] if _scaling_valid(s, low)]
-             for c in (low, high)}
-    # If every low-side sample is out of band (sustained bus episode, or a
-    # tiny smoke input where the ~5.5s driver floor dominates µs/turn),
-    # fall back to all samples but mark the report invalid — never quote it.
-    all_valid = all(valid[c] for c in (low, high))
-    if not all_valid:
-        valid = samples
-    best = {c: min(valid[c], key=lambda r: r["pipeline_sec"]) for c in (low, high)}
-    t_low = best[low]["pipeline_sec"]
-    t_high = best[high]["pipeline_sec"]
-    eff = (t_low / t_high) / (high / low)
-    n_per_level = min(len(samples[low]), len(samples[high]))
-    report = {
+    best = {c: min(samples[c], key=lambda r: r["pipeline_sec"]) for c in (low, high)}
+    eff = (best[low]["pipeline_sec"] / best[high]["pipeline_sec"]) / (high / low)
+    return {
         "metric": "scaling_efficiency",
         "value": round(eff, 3),
         "unit": f"speedup/(cores ratio) local[{low}]->local[{high}]",
         "throughput_low": best[low]["value"],
         "throughput_high": best[high]["value"],
         "n_turns": best[low]["n_turns"],
-        "sf": best[low]["sf"],
-        "rounds_accumulated": n_per_level,
-        "samples_per_level": {str(c): len(samples[c]) for c in (low, high)},
-        "valid_per_level": {str(c): len(valid[c]) for c in (low, high)},
-        "protocol_valid": all_valid,
-        "invalid_low_samples": sum(
-            1 for s in samples[low] if not _scaling_valid(s, low)),
+        "sf": sf,
+        "rounds": rounds,
+        "samples": {
+            str(c): [{"pipeline_sec": s["pipeline_sec"],
+                      "us_per_turn": round(1e6 * s["pipeline_sec"] / s["n_turns"], 2),
+                      "steal_pct": s["steal_pct"]}
+                     for s in samples[c]]
+            for c in (low, high)
+        },
     }
-    def _fmt(c):
-        return ", ".join(
-            f"{s['pipeline_sec']:.1f}s/{s['us_per_turn']}µs"
-            + ("" if _scaling_valid(s, low) else " INVALID(band)")
-            for s in samples[c])
-    # Quiet mode: back-to-back accumulating invocations skip the BENCH.md
-    # append (the state file keeps every sample); the final invocation runs
-    # without the flag and renders the full accumulated report once.
-    if os.environ.get("SPARK_GRAFT_SCALING_QUIET"):
-        return report
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            f"\n## Scaling run ({time.strftime('%Y-%m-%d %H:%M:%S')}, "
-            f"best of {len(samples[low])}x local[{low}] / "
-            f"{len(samples[high])}x local[{high}] interleaved samples"
-            f"{', accumulated across invocations' if state_path else ''})\n\n"
-            f"| parallelism | n_turns | pipeline sec (best valid) | turns/sec | all samples (sec / µs-per-turn) | steal% |\n"
-            f"|---|---|---|---|---|---|\n"
-            + "".join(
-                f"| local[{c}] | {best[c]['n_turns']} | {best[c]['pipeline_sec']:.3f} | "
-                f"{best[c]['value']} | {_fmt(c)} | "
-                f"{[s.get('steal_pct') for s in samples[c]]} |\n"
-                for c in (low, high)
-            )
-            + f"\nStage timings (best): local[{low}]={best[low].get('stage_timings')}, "
-            f"local[{high}]={best[high].get('stage_timings')}\n\n"
-            f"Scaling efficiency (T_{low}/T_{high})/({high}/{low}) = **{eff:.3f}**"
-            f" (target ≥ 0.8 per BASELINE.json north rule; min over valid"
-            f" samples per level, local[1] validity band ≤"
-            f" {LOCAL1_US_PER_TURN_CEILING} µs/turn per BENCH.md"
-            f" host-noise protocol).\n"
-        )
-    return report
-
-
-def main_clusters_scale(cores: int, n_templates: int = 150_000) -> dict:
-    """Time the DISTRIBUTED clustering branch (>400k band rows →
-    min-label propagation, operators/fingerprint.py) — the branch a
-    100-TB run would take. The sf0.1 pipeline bench never leaves the
-    driver-union-find probe (distinct templates ≈ code sites), so this
-    mode synthesizes a free-text-shaped corpus of DISTINCT templates:
-    groups of 3 near-dup variants (shared shingle mass within a group →
-    real band collisions and non-trivial components) sized past the
-    400k-band-row probe bound. Also times the driver path on the SAME
-    corpus (bound raised) so the crossover cost is measured, not guessed."""
-    from pyspark.sql import functions as SF
-
-    spark = _build(cores)
-    try:
-        from cardinalhq_otel_collector_spark.operators.fingerprint import (
-            cluster_templates,
-            template_bands,
-        )
-
-        df = (
-            spark.range(n_templates)
-            .select(
-                SF.concat(
-                    SF.lit("request path=/api/v"),
-                    (SF.col("id") % 40).cast("string"),
-                    SF.lit("/resource method=GET status=<NUM> group-"),
-                    SF.floor(SF.col("id") / 3).cast("string"),
-                    SF.lit(" variant suffix "),
-                    (SF.col("id") % 3).cast("string"),
-                ).alias("template")
-            )
-            .withColumn("fingerprint", SF.xxhash64("template"))
-            .repartition(2 * cores)
-            .persist()
-        )
-        n = df.count()
-        band_rows = template_bands(df).count()
-        results = {}
-        for label, bound in (("distributed", 400_000), ("driver_probe", 10_000_000)):
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                out = cluster_templates(df, driver_max_rows=bound)
-                n_clusters = out.select("cluster_id").distinct().count()
-                el = time.perf_counter() - t0
-                best = el if best is None or el < best else best
-            results[label] = {"sec": round(best, 3), "n_clusters": n_clusters}
-        df.unpersist()
-    finally:
-        spark.stop()
-    report = {
-        "metric": "clusters_scale",
-        "n_templates": n,
-        "band_rows": band_rows,
-        "cores": cores,
-        **{k: v["sec"] for k, v in results.items()},
-        "n_clusters": results["distributed"]["n_clusters"],
-        "paths_agree": results["distributed"]["n_clusters"]
-        == results["driver_probe"]["n_clusters"],
-    }
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            f"\n## Distributed-clustering branch timing ({time.strftime('%Y-%m-%d %H:%M:%S')}, "
-            f"best of 2 per path)\n\n"
-            f"| corpus | band rows | cores | distributed min-label (s) | driver probe+union-find (s) | clusters (agree) |\n"
-            f"|---|---|---|---|---|---|\n"
-            f"| {n} distinct templates | {band_rows} | local[{cores}] | "
-            f"{results['distributed']['sec']} | {results['driver_probe']['sec']} | "
-            f"{results['distributed']['n_clusters']} ({report['paths_agree']}) |\n"
-        )
-    return report
 
 
 def main_skew(cores: int = 8, n_convs: int = 40_000, hot_multiplier: int = 1000) -> dict:
@@ -521,8 +312,6 @@ def main_skew(cores: int = 8, n_convs: int = 40_000, hot_multiplier: int = 1000)
     conversation spreads across salt buckets. Reported: routed_write time
     salt=0 vs salt=4*cores on the identical skewed input.
     """
-    import shutil as _sh
-
     from pyspark.sql import functions as F
 
     from cardinalhq_otel_collector_spark.config import PipelineConfig
@@ -550,11 +339,11 @@ def main_skew(cores: int = 8, n_convs: int = 40_000, hot_multiplier: int = 1000)
                 s = run_pipeline(spark, df, Catalog(spark, wh), config=cfg,
                                  run_id=f"skew{salt}-{attempt}")
                 el = time.perf_counter() - t0
-                _sh.rmtree(wh, ignore_errors=True)
+                shutil.rmtree(wh, ignore_errors=True)
                 if best is None or el < best[0]:
                     best = (el, s["timings"])
             timings[salt] = best
-        _sh.rmtree(src, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
     finally:
         spark.stop()
     report = {
@@ -589,21 +378,19 @@ if __name__ == "__main__":
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--skew", action="store_true",
                     help="hot-conversation salting benchmark (appends to BENCH.md)")
-    ap.add_argument("--clusters-scale", action="store_true",
-                    help="time the >400k-band-row distributed clustering branch")
-    ap.add_argument("--n-templates", type=int, default=150_000)
     ap.add_argument("--scaling-low", type=int, default=8)
     ap.add_argument("--scaling-high", type=int, default=32)
     ap.add_argument("--pipeline-only", action="store_true",
                     help="skip query timings (used by --scaling subprocesses)")
+    # the shared input table --scaling hands to its subprocesses
+    ap.add_argument("--src", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
     if args.skew:
         out = main_skew(args.cores)
-    elif args.clusters_scale:
-        out = main_clusters_scale(args.cores, args.n_templates)
     elif args.scaling:
         out = main_scaling(args.sf_dir, args.scaling_low, args.scaling_high)
     else:
-        out = main_default(args.sf_dir, args.cores, skip_queries=args.pipeline_only)
+        out = main_default(args.sf_dir, args.cores, skip_queries=args.pipeline_only,
+                           src=args.src)
     print(json.dumps(out))

@@ -83,28 +83,21 @@ def build_spark(
         # summary-metadata pass is another whole-output serial walk.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
-        # Input split size (guide §6): the local fixtures/bench inputs are
-        # a few MB-to-tens-of-MB per file, so the 128 MB default packs the
-        # whole input into a handful of splits and leaves most cores idle
-        # through the scan stage (openCost charges 4 MB per file on top).
-        # 16 MB matches splits to local core counts. Scale-dependent and
-        # env-overridable: on a real cluster scanning TB-sized tables set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES=512m..1g (guide §6/§9 — fewer,
-        # larger map tasks feeding each shuffle).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # Input split size (guide §6). Spark splits files at
+        # min(maxPartitionBytes, max(openCostInBytes, totalBytes / cores)),
+        # so 16m and the 128m default give identical splits until the input
+        # exceeds cores x 16 MB; every perfbench input is a few MB. Past
+        # that, 16m keeps the scan at one map task per 16 MB. On a cluster
+        # scanning TB-sized tables pass 512m..1g through ``extra_conf``
+        # (guide §6/§9 — fewer, larger map tasks feeding each shuffle).
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         # zstd encode effort for parquet writes (guide §6): the default
         # level 3 spends ~15% more write-stage CPU than level 1 on this
         # corpus for no size win (measured on the pipeline bench: routed
         # stage 17.2s -> 14.5s, output bytes 94.8MB -> 90.8MB at level 1).
-        # Env-overridable for deployments that prefer deeper compression
-        # on cold archival tables.
-        .config(
-            "spark.hadoop.parquet.compression.codec.zstd.level",
-            os.environ.get("SPARK_GRAFT_PARQUET_ZSTD_LEVEL", "1"),
-        )
+        # Deployments that prefer deeper compression on cold archival
+        # tables set it through ``extra_conf``.
+        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
+from ..operators.aggregate import interval_aggregate
 from ..plans.pipeline import decorate, slim_facts
 from ..sources.catalog import add_time_partitions
 
@@ -98,14 +99,12 @@ def run_streaming_pipeline(
         .start()
     )
 
-    aggs = (
-        decorated.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", config.agg_interval).alias("w"), "sink", "conv_id", "tool"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("bucket_start"), "sink", "conv_id", "tool", "n")
-    )
+    # the batch S7 rollup, over a watermarked stream
+    aggs = interval_aggregate(
+        decorated.withWatermark("ts", watermark),
+        keys=["sink", "conv_id", "tool"],
+        interval=config.agg_interval,
+    ).select("bucket_start", "sink", "conv_id", "tool", "n")
     q_aggs = (
         aggs.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "agg_stream"))
