@@ -16,8 +16,6 @@ from .operators.redact import DEFAULT_PII_PATTERNS
 
 __all__ = ["PipelineConfig", "parse_duration_seconds"]
 
-_VALID_AGG = {"sum", "avg", "min", "max"}
-
 _DURATION_UNITS = {
     "second": 1, "seconds": 1,
     "minute": 60, "minutes": 60,
@@ -65,7 +63,6 @@ class PipelineConfig:
     default_sink: str = "default"
     # S7 aggregation (single source of truth; parsed + validated below)
     agg_interval: str = "1 hour"
-    default_agg_type: str = "avg"
     # S6 fan-out
     partition_granularity: str = "day"  # day|hour|minute (partition.go default: minute)
     salt_partitions: int = 0  # >0 → salted repartition before write (hot convs)
@@ -84,8 +81,6 @@ class PipelineConfig:
         # invalid interval fails here, not at Spark runtime.
         if parse_duration_seconds(self.agg_interval) < 1:
             raise ValueError("agg_interval must be >= 1 second")
-        if self.default_agg_type not in _VALID_AGG:
-            raise ValueError(f"default_agg_type must be one of {_VALID_AGG}")
         if self.partition_granularity not in ("day", "hour", "minute"):
             raise ValueError("partition_granularity must be day|hour|minute")
         known_sinks = {r.get("sink") for r in self.rules} | {self.default_sink}

@@ -15,6 +15,7 @@ __all__ = [
     "url_encode",
     "clamp_int64",
     "json_line",
+    "md5_int",
     "deterministic_bucket",
     "z_order_key",
 ]
@@ -81,11 +82,21 @@ def json_line(**fields: Column) -> Column:
     return F.to_json(F.struct(*[c.alias(k) for k, c in fields.items()]))
 
 
+def md5_int(col: Column, hex_digits: int) -> Column:
+    """The first ``hex_digits`` hex digits of md5(col as string) as an
+    unsigned long; NULL in, NULL out. The one deterministic hash behind
+    the sampling, sketch, Bloom, mixture and LSH operators: 8 digits give
+    a 32-bit value, 13 digits a 52-bit one that fits exactly in both a
+    BIGINT and an IEEE double. Any engine with md5 reproduces it (DuckDB:
+    ``CAST('0x' || substr(md5(x), 1, d) AS BIGINT)``)."""
+    return F.conv(F.substring(F.md5(col.cast("string")), 1, hex_digits), 16, 10).cast("long")
+
+
 def deterministic_bucket(key: Column, buckets: int) -> Column:
     """Uniform bucket in [0, buckets) from md5(key): stable across engines,
     partitionings, retries, and cluster sizes (probabilisticsampler
     analogue — the reference hashes ids, never RNG)."""
-    return F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long") % buckets
+    return md5_int(key, 8) % buckets
 
 
 def z_order_key(a: Column, b: Column, bits: int = 16) -> Column:

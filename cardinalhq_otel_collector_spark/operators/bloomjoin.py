@@ -24,23 +24,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = ["bloom_bits", "bloom_semi_filter"]
 
 
 def _positions(key: Column, k: int, m: int) -> list[Column]:
-    return [
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"h{i}|"), key.cast("string"))), 1, 13
-                ),
-                16,
-                10,
-            ).cast("long")
-            % m
-        )
-        for i in range(k)
-    ]
+    return [md5_int(F.concat(F.lit(f"h{i}|"), key.cast("string")), 13) % m for i in range(k)]
 
 
 def bloom_bits(small: DataFrame, key_col: str, k: int = 3, m: int = 1024) -> DataFrame:

@@ -21,22 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = ["cms_counts"]
 
 
 def _cell(i_col, key_col, width: int):
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(i_col.cast("string"), F.lit("|"), key_col.cast("string"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+    return md5_int(F.concat(i_col.cast("string"), F.lit("|"), key_col.cast("string")), 13) % width
 
 
 def cms_counts(

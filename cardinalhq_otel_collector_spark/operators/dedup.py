@@ -28,6 +28,7 @@ __all__ = [
     "ngram_jaccard_pairs",
     "minhash_signatures",
     "minhash_lsh_candidates",
+    "band_pairs",
     "simhash",
     "simhash_candidates",
     "neardup_components",
@@ -120,25 +121,31 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     n: int = 12,
 ) -> DataFrame:
-    """Near-dup candidate pairs: docs sharing any LSH band bucket.
-
-    The band-bucket equi-join is the only shuffle over pairs; its size is
-    the true collision count, not n². Feed the output to
+    """Near-dup candidate pairs: docs sharing any LSH band bucket. All
+    band keys come from one projection over the signatures
+    (``band_pairs`` does the join). Feed the output to
     ngram_jaccard_pairs (restricted to candidates) for exact verification.
     """
     sig = minhash_signatures(df, n_hashes, text_col, id_col, n)
-    n_bands = n_hashes // band_size
-    band_rows = None
-    for bnd in range(n_bands):
-        cols = [F.lit(f"b{bnd}#")] + [F.col(f"h{bnd * band_size + j}") for j in range(band_size)]
-        part = sig.select(F.col(id_col), F.concat(*cols).alias("band"))
-        band_rows = part if band_rows is None else band_rows.unionByName(part)
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
+    keys = [
+        F.concat(F.lit(f"b{bnd}#"), *[F.col(f"h{bnd * band_size + j}") for j in range(band_size)])
+        for bnd in range(n_hashes // band_size)
+    ]
+    return band_pairs(sig.select(id_col, F.explode(F.array(*keys)).alias("band")), id_col)
+
+
+def band_pairs(bands: DataFrame, id_col: str, keys: tuple[str, ...] = ("band",)) -> DataFrame:
+    """LSH candidate pairs from (id, band key) rows: every two ids that
+    share a key, as (id_a, id_b) with id_a < id_b, once each. The equi-join
+    on the key is the only shuffle over pairs, so its size is the true
+    collision count, never n². The one band self-join behind the MinHash,
+    SimHash and embedding near-dup candidates."""
+    on = list(keys)
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        bands.select(F.col(id_col).alias("id_a"), *on)
+        .join(bands.select(F.col(id_col).alias("id_b"), *on), on)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -174,22 +181,11 @@ def simhash_candidates(
     (Hamming-ball LSH: a pair within distance (bits/band_bits - 1) shares
     ≥1 exact band by pigeonhole)."""
     sig = simhash(df, bits, text_col, id_col)
-    n_bands = bits // band_bits
-    bands = None
-    for bnd in range(n_bands):
-        part = sig.select(
-            F.col(id_col),
-            F.concat(F.lit(f"b{bnd}#"), F.substring("simhash", bnd * band_bits + 1, band_bits)).alias("band"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    keys = [
+        F.concat(F.lit(f"b{bnd}#"), F.substring("simhash", bnd * band_bits + 1, band_bits))
+        for bnd in range(bits // band_bits)
+    ]
+    return band_pairs(sig.select(id_col, F.explode(F.array(*keys)).alias("band")), id_col)
 
 
 def neardup_components(
@@ -205,8 +201,10 @@ def neardup_components(
     rule — so the pair graph must be closed transitively.
 
     Reuses the size-adaptive component engine behind template
-    clustering (`fingerprint.components_from_bands`): each pair becomes
-    an edge-key "band" with two members, so a bounded pair set resolves
+    clustering (`fingerprint.components_from_bands`): both ends of a pair
+    join the "band" keyed by its smaller end. That end is a member of its
+    own band, so every band is connected and the components are those of
+    the pair graph, for ids of any type. A bounded pair set resolves
     driver-side via union-find and a corpus-scale one runs distributed
     min-label propagation, with a path-equivalence guarantee. Only docs
     that appear in ≥1 pair are in the mapping.
@@ -214,11 +212,8 @@ def neardup_components(
     from .fingerprint import components_from_bands
 
     l, r = F.col(left_col), F.col(right_col)
-    edge = F.concat_ws(
-        "_", F.least(l, r).cast("string"), F.greatest(l, r).cast("string")
-    ).alias("band")
-    bands = pairs.select(l.alias("fingerprint"), edge).unionAll(
-        pairs.select(r.alias("fingerprint"), edge)
+    bands = pairs.select(
+        F.explode(F.array(l, r)).alias("fingerprint"), F.least(l, r).alias("band")
     )
     return components_from_bands(bands, driver_max_rows)
 

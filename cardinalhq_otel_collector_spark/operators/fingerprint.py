@@ -244,9 +244,10 @@ def components_from_bands(
 ) -> DataFrame:
     """Size-adaptive connected components over ANY (fingerprint, band)
     bipartite frame → (fingerprint, cluster_id) mapping labeled by the
-    component's min fingerprint. The shared engine behind template
-    clustering (band = LSH bucket) and near-dup pair canonicalization
-    (band = edge key, dedup.neardup_components): probe the band set with
+    component's min fingerprint, of the input's fingerprint type. The
+    shared engine behind template clustering (band = LSH bucket) and
+    near-dup pair canonicalization (band = a pair's smaller end,
+    dedup.neardup_components): probe the band set with
     one HARD-bounded collect; below the bound, driver union-find (2
     Spark jobs, broadcast mapping); above it, distributed min-label
     propagation — the driver never holds the set. Both paths produce
@@ -255,9 +256,9 @@ def components_from_bands(
     probe = bands.limit(driver_max_rows + 1).collect()
     if len(probe) <= driver_max_rows:
         # probe returned the COMPLETE band set (limit k+1 yielding ≤k rows)
-        return F.broadcast(
-            local_frame(spark, _driver_components(probe), "fingerprint long, cluster_id long")
-        )
+        t = bands.schema["fingerprint"].dataType.simpleString()
+        schema = f"fingerprint {t}, cluster_id {t}"
+        return F.broadcast(local_frame(spark, _driver_components(probe), schema))
     return _propagate_min_labels(bands).withColumnRenamed("label", "cluster_id")
 
 

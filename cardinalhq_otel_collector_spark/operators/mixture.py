@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = ["materialize_mixture"]
 
 
@@ -44,24 +46,8 @@ def materialize_mixture(
     copies = F.when(
         w >= 1, F.sequence(F.lit(1), w.cast("int"))
     ).otherwise(F.array().cast("array<int>"))
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(id_col).cast("string"),
-                        F.lit(":"),
-                        F.col("copy_idx").cast("string"),
-                    )
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % shards
-    )
+    key = F.concat(F.col(id_col).cast("string"), F.lit(":"), F.col("copy_idx").cast("string"))
+    shard = md5_int(key, 13) % shards
     return (
         df.select(id_col, source_col, F.explode(copies).alias("copy_idx"))
         .withColumn("shard", shard)

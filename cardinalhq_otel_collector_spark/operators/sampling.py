@@ -12,8 +12,10 @@ partitionings, and retries. No RNG anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import md5_int
 
 __all__ = [
     "probabilistic_sample",
@@ -29,15 +31,10 @@ __all__ = [
 ]
 
 
-def sample_bucket(key: Column, buckets: int = 1 << 32) -> Column:
-    """Deterministic uniform bucket in [0, buckets) from md5(key)."""
-    return F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long") % buckets
-
-
 def probabilistic_sample(df: DataFrame, key_col: str, p: float) -> DataFrame:
     """Keep ≈p of rows, decided by md5(key) — same key always same verdict."""
     threshold = int(p * (1 << 32))
-    return df.filter(sample_bucket(F.col(key_col)) < threshold)
+    return df.filter(md5_int(F.col(key_col), 8) < threshold)
 
 
 def tail_sample(
@@ -275,12 +272,9 @@ def negative_samples(
     Hash contract: the shared 52-bit md5 space (kmv/cms/weighted-
     sample discipline), reproducible verbatim by the oracle.
     """
-    h52 = lambda c: F.conv(  # noqa: E731 — local shorthand, same contract as sketch._hash52
-        F.substring(F.md5(c.cast("string")), 1, 13), 16, 10
-    ).cast("long")
     ids = df.select(id_col).distinct()
     reps = (
-        ids.select(id_col, (h52(F.col(id_col)) % buckets).alias("__b"))
+        ids.select(id_col, (md5_int(F.col(id_col), 13) % buckets).alias("__b"))
         .groupBy("__b")
         .agg(F.min(id_col).alias("neg_id"))
     )
@@ -288,7 +282,7 @@ def negative_samples(
         id_col, F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j")
     ).withColumn(
         "__b",
-        h52(F.concat(F.col(id_col).cast("string"), F.lit("#"), F.col("j").cast("string")))
+        md5_int(F.concat(F.col(id_col).cast("string"), F.lit("#"), F.col("j").cast("string")), 13)
         % buckets,
     )
     return (

@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
 from ..session import local_frame
+from .dedup import band_pairs
 
 __all__ = [
     "norms",
@@ -161,10 +163,7 @@ def hyperplane_table(spark, bits: int, dim: int) -> DataFrame:
     table materializes on any cluster, any engine."""
     planes = spark.range(bits).select(F.col("id").alias("plane"))
     dims = spark.range(1, dim + 1).select(F.col("id").alias("i"))
-    w = (
-        F.conv(F.substring(F.md5(F.concat_ws("|", "plane", "i")), 1, 8), 16, 10).cast("double")
-        / F.lit(float(1 << 32)) * 2 - 1
-    )
+    w = md5_int(F.concat_ws("|", "plane", "i"), 8).cast("double") / F.lit(float(1 << 32)) * 2 - 1
     return planes.crossJoin(dims).withColumn("w", w)
 
 
@@ -264,13 +263,7 @@ def embedding_neardup_pairs(
     θ — at high thresholds (near-dups) candidates are near-certain.
     """
     b = hyperplane_buckets(corpus, bits, n_bands, vec_col, id_col, dim)
-    cand = (
-        b.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        .join(b.select(F.col(id_col).alias("id_b"), "band", "bucket"), ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cand = band_pairs(b, id_col, ("band", "bucket"))
     side = corpus.select(
         F.col(id_col),
         F.col(vec_col),

@@ -25,18 +25,16 @@ truncate toward zero, and all operands are nonnegative.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions import md5_int
 
 __all__ = ["kmv_distinct", "kmv_rolling_distinct"]
 
 # 2^52 — the hash-space size. 13 hex digits of md5.
 _HASH_SPACE = 1 << 52
-
-
-def _hash52(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 13), 16, 10).cast("long")
 
 
 def _bottom_k_estimate(distinct_hashes: DataFrame, by: list[str], k: int) -> DataFrame:
@@ -95,7 +93,7 @@ def kmv_distinct(
     # (Spark NULLS FIRST vs DuckDB NULLS LAST) — drop before hashing.
     distinct_hashes = (
         df.where(F.col(value_col).isNotNull())
-        .select(*[F.col(c) for c in by], _hash52(F.col(value_col)).alias("__h"))
+        .select(*[F.col(c) for c in by], md5_int(F.col(value_col), 13).alias("__h"))
         .distinct()
     )
     return _bottom_k_estimate(distinct_hashes, by, k)
@@ -122,7 +120,7 @@ def kmv_rolling_distinct(
     day = F.date_trunc("day", F.col(ts_col))
     day_hashes = (
         df.where(F.col(value_col).isNotNull())
-        .select(day.alias("__day"), _hash52(F.col(value_col)).alias("__h"))
+        .select(day.alias("__day"), md5_int(F.col(value_col), 13).alias("__h"))
         .distinct()
     )
     days = day_hashes.select(F.col("__day").alias("day")).distinct()

@@ -137,8 +137,6 @@ def marshal_routed(df: DataFrame, fmt: str, sink: str) -> DataFrame:
 def decorate(
     transcripts: DataFrame,
     config: PipelineConfig,
-    tools: DataFrame | None = None,
-    roles: DataFrame | None = None,
     cluster: bool = True,
 ) -> DataFrame:
     """S1-S5: the chqdecorator-equivalent transform chain — one declarative
@@ -156,9 +154,9 @@ def decorate(
     if cluster:
         df = attach_clusters(df)                                    # S2 pass 2
     df = redact(df, config.pii_patterns)                            # S3
-    df = enrich(df, tools if tools is not None else tool_lookup(spark), "tool",
+    df = enrich(df, tool_lookup(spark), "tool",
                 fill_unknown={"tool_category": "unknown", "tool_owner": "unknown", "valid": False})  # S4
-    df = enrich(df, roles if roles is not None else role_lookup(spark), "role",
+    df = enrich(df, role_lookup(spark), "role",
                 fill_unknown={"role_kind": "unknown"})
     df = route(df, config.rules, default_sink=config.default_sink)  # S5
     return df
@@ -172,8 +170,6 @@ def run_pipeline(
     run_id: str | None = None,
     resume: bool = False,
     fail_after_stage: str | None = None,
-    tools: DataFrame | None = None,
-    roles: DataFrame | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline. Returns a summary dict:
     ``run_id``, ``stages_run``, ``stages_skipped`` and ``timings`` (seconds
@@ -209,9 +205,7 @@ def run_pipeline(
         if name == fail_after_stage:
             raise RuntimeError(f"injected failure after {name}")
 
-    decorated = slim_facts(
-        decorate(transcripts, config, tools=tools, roles=roles, cluster=False)
-    )
+    decorated = slim_facts(decorate(transcripts, config, cluster=False))
     if config.salt_partitions > 0:
         # bound partition size under hot conversations: spread each conv's
         # turns over salt buckets; sink stays the leading key so the
@@ -332,7 +326,7 @@ def _observe_rows(df: DataFrame, sinks: list[str] | None = None) -> tuple[DataFr
     return df.observe(obs, *counts), obs
 
 
-def read_routed_with_clusters(catalog: Catalog, sink: str | None = None) -> DataFrame:
+def read_routed_with_clusters(catalog: Catalog) -> DataFrame:
     """Read the routed fact table joined (broadcast) with the cluster
     dimension — how consumers get cluster_id without it being burned into
     10^12 fact rows.
@@ -341,12 +335,7 @@ def read_routed_with_clusters(catalog: Catalog, sink: str | None = None) -> Data
     (fact-table slimming above); this reader restores the full contract with
     ``coalesce(text_redacted, text)`` so the storage optimization is
     invisible to consumers."""
-    facts = (
-        catalog.read_partition(ROUTED_TABLE, sink=sink)
-        if sink is not None
-        else catalog.read(ROUTED_TABLE)
-    )
-    facts = facts.withColumn(
+    facts = catalog.read(ROUTED_TABLE).withColumn(
         "text_redacted", F.coalesce(F.col("text_redacted"), F.col("text"))
     )
     dim = catalog.read(CLUSTERS_TABLE).select("fingerprint", "cluster_id").distinct()

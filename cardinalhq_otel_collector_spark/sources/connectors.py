@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import deterministic_bucket
 from .catalog import Catalog
 
 __all__ = ["failover_write", "round_robin_assign"]
@@ -61,8 +62,4 @@ def round_robin_assign(
 ) -> DataFrame:
     """Deterministic round-robin assignment: md5(key) mod n_ways (the
     reference's in-memory rotation is not retry-stable; hashing is)."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10)
-        .cast("long") % n_ways
-    )
-    return df.withColumn(out_col, bucket.cast("int"))
+    return df.withColumn(out_col, deterministic_bucket(F.col(key_col), n_ways).cast("int"))

@@ -38,11 +38,6 @@ def test_mask_must_not_match_any_pattern():
         ).validate()
 
 
-def test_bad_agg_type():
-    with pytest.raises(ValueError, match="default_agg_type"):
-        PipelineConfig(rules=_rules(), default_agg_type="median").validate()
-
-
 def test_duplicate_rule_ids():
     rules = _rules() + [{"rule_id": 1, "predicate": "x < 1", "sink": "b"}]
     with pytest.raises(ValueError, match="duplicate rule_id"):

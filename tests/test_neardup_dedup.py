@@ -33,6 +33,12 @@ def test_neardup_components_driver_vs_distributed_agree(spark):
     a = {tuple(r) for r in neardup_components(pairs).collect()}
     b = {tuple(r) for r in neardup_components(pairs, driver_max_rows=1).collect()}
     assert a == b and len(a) > 0
+    # string ids whose '_'-joined pair keys collide: both edges would
+    # read "a_b_c", yet {a, b_c} and {a_b, c} are separate components
+    pairs = spark.createDataFrame([("a_b", "c"), ("a", "b_c")], "id_a string, id_b string")
+    want = {("a", "a"), ("b_c", "a"), ("a_b", "a_b"), ("c", "a_b")}
+    for bound in (400_000, 1):
+        assert {tuple(r) for r in neardup_components(pairs, driver_max_rows=bound).collect()} == want
 
 
 def test_neardup_dedup_empty_pairs(spark):

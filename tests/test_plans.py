@@ -5,7 +5,8 @@ actual executed plans (SURVEY.md §4):
   * lookup joins go broadcast, never shuffle the fact stream
   * the decorate chain stays whole-stage-codegen JVM (no Python nodes),
     and driver-built tables are LocalTableScans, not Python-RDD scans
-  * the S2 MinHash bands are one aggregation (one exchange, no join)
+  * the S2 MinHash bands are one aggregation (one exchange, no join), and
+    the MinHash/SimHash candidate bands are one projection (no union)
   * partitioned reads prune to one sink directory
 """
 
@@ -13,6 +14,10 @@ from pyspark.sql import functions as F
 
 from cardinalhq_otel_collector_spark.config import PipelineConfig
 from cardinalhq_otel_collector_spark.datagen import routing_rules, tool_lookup
+from cardinalhq_otel_collector_spark.operators.dedup import (
+    minhash_lsh_candidates,
+    simhash_candidates,
+)
 from cardinalhq_otel_collector_spark.operators.enrich import enrich
 from cardinalhq_otel_collector_spark.operators.fingerprint import (
     cluster_templates,
@@ -78,6 +83,19 @@ def test_template_bands_is_one_aggregation(spark):
     plan = _plan(template_bands(local_frame(spark, rows, "template string, fingerprint long")))
     assert "Union" not in plan and "Join" not in plan
     assert plan.count("Exchange") <= 1
+
+
+def test_lsh_candidates_build_bands_in_one_projection(spark):
+    """The MinHash and SimHash candidate operators take all their band
+    keys from one explode over the signatures: no per-band union branch,
+    so the signature aggregate runs once."""
+    docs = local_frame(
+        spark,
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumped"), (3, "lorem ipsum")],
+        "doc_id long, text string",
+    )
+    for cands in (minhash_lsh_candidates(docs), simhash_candidates(docs)):
+        assert "Union" not in _plan(cands)
 
 
 def test_routed_read_prunes_to_sink_partition(spark, transcripts_df, warehouse):

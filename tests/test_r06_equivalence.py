@@ -183,7 +183,9 @@ def test_remove_high_df_tokens_matches_reassembly_reference(spark):
     """The broadcast-bad-set array filter must reproduce the old
     token-level join + array_sort(collect_list(struct)) reassembly row
     for row on random corpora, including boundary-DF tokens, repeated
-    tokens, and a ratio that empties some documents."""
+    tokens, and a ratio that empties some documents. The 60-document
+    corpus at ratio 0.5 makes total*ratio an integer: a token in exactly
+    30 documents sits on the boundary and is kept, one in 31 is removed."""
     from cardinalhq_otel_collector_spark.operators.textstats import (
         remove_high_df_tokens,
     )
@@ -194,17 +196,21 @@ def test_remove_high_df_tokens_matches_reassembly_reference(spark):
         (i, " ".join(random.choice(vocab) for _ in range(random.randrange(1, 15))))
         for i in range(60)
     ]
+    boundary = spark.createDataFrame(
+        [(i, " ".join([t] + ["edge"] * (i < 30) + ["over"] * (i < 31))) for i, t in rows],
+        "doc_id long, text string",
+    )
     rows.append((60, "w0"))  # single-token doc; may come out empty
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    for ratio in (0.3, 0.78):
-        new = remove_high_df_tokens(df, max_df_ratio=ratio)
+    for corpus, ratio in ((df, 0.3), (df, 0.78), (boundary, 0.5)):
+        new = remove_high_df_tokens(corpus, max_df_ratio=ratio)
 
-        words = df.select(
+        words = corpus.select(
             "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
         )
         dfreq = words.groupBy("w").agg(F.countDistinct("doc_id").alias("nd"))
-        total = df.select(F.count(F.lit(1)).alias("tot"))
+        total = corpus.select(F.count(F.lit(1)).alias("tot"))
         kept = (
             words.join(F.broadcast(dfreq), "w")
             .crossJoin(F.broadcast(total))
@@ -228,6 +234,8 @@ def test_remove_high_df_tokens_matches_reassembly_reference(spark):
         )
         cols = ["doc_id", "text_filtered", "n_kept", "n_removed"]
         assert _rows(new, cols) == _rows(old, cols), f"ratio={ratio}"
+    kept = {w for r in new.collect() for w in r["text_filtered"].split(" ")}
+    assert "edge" in kept and "over" not in kept
 
 
 def test_projection_chain_dot_bitwise_matches_decimal_sum_agg(spark):
