@@ -47,7 +47,6 @@ __all__ = [
     "template_bands",
     "cluster_templates",
     "components_from_bands",
-    "attach_clusters",
     "fingerprint_and_cluster",
 ]
 
@@ -262,19 +261,13 @@ def components_from_bands(
     return _propagate_min_labels(bands).withColumnRenamed("label", "cluster_id")
 
 
-def attach_clusters(df: DataFrame) -> DataFrame:
-    """Given a frame that already has (template, fingerprint) columns
-    (pass 1), compute the cluster map from its distinct templates and join
-    it back. Call this AFTER persisting the upstream frame: the
-    distinct-template scan then reads the cache instead of recomputing the
-    whole chain (the two-pass structure of SURVEY.md §7 step 5). The join
-    is left to AQE: broadcast when the template set is small (the log-
-    shaped common case), shuffle join when free text blows it up."""
+def fingerprint_and_cluster(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Full S2: rows → + template, fingerprint, cluster_id. Pass 1 tags
+    each row; pass 2 computes the cluster map from the distinct templates
+    and joins it back (the two-pass structure of SURVEY.md §7 step 5). The
+    join is left to AQE: broadcast when the template set is small (the
+    log-shaped common case), shuffle join when free text blows it up."""
+    df = fingerprint(df, text_col)
     distinct = df.select("template", "fingerprint").distinct()
     # the mapping is already one row per fingerprint
     return df.join(components_from_bands(template_bands(distinct)), "fingerprint", "left")
-
-
-def fingerprint_and_cluster(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Full S2: rows → + template, fingerprint, cluster_id."""
-    return attach_clusters(fingerprint(df, text_col))

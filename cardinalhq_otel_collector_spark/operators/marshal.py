@@ -215,7 +215,7 @@ def otlp_json_logs(
     return df.withColumn(out_col, F.to_json(envelope))
 
 
-def _otlp_schema(n_attrs: int, n_res_attrs: int) -> T.StructType:
+def _otlp_schema() -> T.StructType:
     kv = T.ArrayType(
         T.StructType(
             [
@@ -266,7 +266,7 @@ def _otlp_schema(n_attrs: int, n_res_attrs: int) -> T.StructType:
 def parse_otlp_json_logs(df: DataFrame, json_col: str = "otlp_json") -> DataFrame:
     """Inverse of otlp_json_logs for round-trip tests: one row per log
     record with (ts, body, attributes map)."""
-    parsed = df.withColumn("_o", F.from_json(F.col(json_col), _otlp_schema(0, 0)))
+    parsed = df.withColumn("_o", F.from_json(F.col(json_col), _otlp_schema()))
     rec = F.explode(
         F.flatten(
             F.col("_o.resourceLogs")[0]["scopeLogs"].getField("logRecords")

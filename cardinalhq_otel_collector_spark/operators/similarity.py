@@ -1,6 +1,6 @@
 """Similarity search over an embedding column (array<float>).
 
-Two tiers:
+Three tiers, one rerank (``_cosine_topk``):
 
   brute_force_topk   exact cosine top-k — the correctness baseline. Dot
                      products accumulate in DECIMAL (exact, so bit-stable
@@ -10,6 +10,8 @@ Two tiers:
   lsh_topk           hyperplane-sign LSH buckets → exact rerank within
                      bucket — the scale path: each query only scans its
                      bucket, so cost is n/2^bits per query instead of n.
+  ivf_topk           k-means coarse quantizer → exact rerank within the
+                     ``n_probe`` nearest centroid buckets.
 
 No Python on the row path; no higher-order-function lambdas (projection-
 collapse miscompilation — see operators/fingerprint.py).
@@ -26,7 +28,6 @@ from .dedup import band_pairs
 
 __all__ = [
     "norms",
-    "cosine_scores",
     "brute_force_topk",
     "sign_buckets",
     "hyperplane_table",
@@ -88,45 +89,46 @@ def _nrm2_col(v: str, dim: int) -> Column:
     return _dot_col(v, v, dim)
 
 
-def norms(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", dim: int = 64) -> DataFrame:
-    """Per-row squared L2 norm (ids are unique by operator contract, so
-    the previous explode+groupBy and this projection agree)."""
-    return df.select(
-        F.col(id_col),
-        _nrm2_col(vec_col, dim).cast("double").alias("nrm2"),
-    )
-
-
-def cosine_scores(
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
-    """All-pairs cosine between ``queries`` (small) and ``corpus``.
-
-    queries is broadcast; the per-position products are decimal-summed.
-    Output: (qid, vec_id, cosine).
-    """
-    q = queries.select(
+def _query_side(queries: DataFrame, vec_col: str, id_col: str, dim: int) -> DataFrame:
+    """(qid, qe, qn): the query vector and its squared norm — the
+    broadcast side of every rerank pair join."""
+    return queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qe"),
         _nrm2_col(vec_col, dim).cast("double").alias("qn"),
     )
-    # corpus norm hoisted BEFORE the pair join: one chain per corpus row,
-    # not one per (query, corpus) pair
-    c = corpus.select(
+
+
+def _corpus_side(corpus: DataFrame, vec_col: str, id_col: str, dim: int) -> DataFrame:
+    """(id, vector, nrm2): the squared norm is computed here, once per
+    corpus row, BEFORE any pair join — not once per (query, corpus) pair."""
+    return corpus.select(
         F.col(id_col),
         F.col(vec_col),
         _nrm2_col(vec_col, dim).cast("double").alias("nrm2"),
     )
-    joined = c.join(F.broadcast(q), F.col("qid") != F.col(id_col))
+
+
+def _cosine_topk(pairs: DataFrame, k: int, vec_col: str, id_col: str, dim: int) -> DataFrame:
+    """Exact cosine rerank of candidate pairs carrying both sides
+    (``_query_side`` ⋈ ``_corpus_side``): one projection-level chain dot
+    per pair, rank per query by the UNROUNDED cosine (ties by id), keep
+    ``nn_rank <= k``, round to 6 places. Output: (qid, id, cosine, nn_rank)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
     return (
-        joined.withColumn("dot", _dot_col("qe", vec_col, dim).cast("double"))
+        pairs.withColumn("dot", _dot_col("qe", vec_col, dim).cast("double"))
         .withColumn("cosine", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm2")))
-        .select("qid", id_col, "cosine")
+        .withColumn("nn_rank", F.row_number().over(w))
+        .filter(F.col("nn_rank") <= k)
+        .withColumn("cosine", F.round("cosine", 6))
+        .select("qid", id_col, "cosine", "nn_rank")
     )
+
+
+def norms(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id", dim: int = 64) -> DataFrame:
+    """Per-row squared L2 norm (ids are unique by operator contract, so
+    the previous explode+groupBy and this projection agree)."""
+    return _corpus_side(df, vec_col, id_col, dim).select(id_col, "nrm2")
 
 
 def brute_force_topk(
@@ -137,13 +139,13 @@ def brute_force_topk(
     id_col: str = "vec_id",
     dim: int = 64,
 ) -> DataFrame:
-    scored = cosine_scores(queries, corpus, vec_col, id_col, dim)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .withColumn("cosine", F.round("cosine", 6))
+    """Exact cosine top-k: every (query, corpus) pair but self-pairs, the
+    query side broadcast. Output: (qid, vec_id, cosine, nn_rank)."""
+    pairs = _corpus_side(corpus, vec_col, id_col, dim).join(
+        F.broadcast(_query_side(queries, vec_col, id_col, dim)),
+        F.col("qid") != F.col(id_col),
     )
+    return _cosine_topk(pairs, k, vec_col, id_col, dim)
 
 
 def sign_buckets(df: DataFrame, bits: int = 4, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
@@ -264,17 +266,13 @@ def embedding_neardup_pairs(
     """
     b = hyperplane_buckets(corpus, bits, n_bands, vec_col, id_col, dim)
     cand = band_pairs(b, id_col, ("band", "bucket"))
-    side = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _nrm2_col(vec_col, dim).cast("double").alias("__n"),
-    )
+    side = _corpus_side(corpus, vec_col, id_col, dim)
     return (
         cand.join(
             side.select(
                 F.col(id_col).alias("id_a"),
                 F.col(vec_col).alias("__va"),
-                F.col("__n").alias("na"),
+                F.col("nrm2").alias("na"),
             ),
             "id_a",
         )
@@ -282,7 +280,7 @@ def embedding_neardup_pairs(
             side.select(
                 F.col(id_col).alias("id_b"),
                 F.col(vec_col).alias("__vb"),
-                F.col("__n").alias("nb"),
+                F.col("nrm2").alias("nb"),
             ),
             "id_b",
         )
@@ -305,13 +303,14 @@ def _sq_dists(e: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _argmin_cid(dists: DataFrame, id_col: str) -> DataFrame:
-    """(id, cid) of the nearest centroid, ties broken by smallest cid —
-    deterministic under any partitioning (dist2 is decimal-exact)."""
+def _nearest(dists: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, cid) of the ``n`` nearest centroids per id, ties broken by
+    smallest cid — deterministic under any partitioning (dist2 is
+    decimal-exact)."""
     w = Window.partitionBy(id_col).orderBy(F.col("dist2"), F.col("cid"))
     return (
         dists.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        .filter(F.col("_rn") <= n)
         .select(id_col, "cid")
     )
 
@@ -361,7 +360,7 @@ def ivf_centroids(
         .select("cid", "i", F.col("v").alias("c"))
     )
     for _ in range(n_iters):
-        assign = _argmin_cid(_sq_dists(e, cent, id_col), id_col)
+        assign = _nearest(_sq_dists(e, cent, id_col), id_col, 1)
         upd = (
             e.join(assign, id_col)
             .groupBy("cid", "i")
@@ -391,7 +390,7 @@ def ivf_assign(
     e = _pos_explode(corpus.select(id_col, vec_col), vec_col, dim, "v").select(
         id_col, "i", "v"
     )
-    return _argmin_cid(_sq_dists(e, cent, id_col), id_col)
+    return _nearest(_sq_dists(e, cent, id_col), id_col, 1)
 
 
 def ivf_topk(
@@ -416,52 +415,17 @@ def ivf_topk(
     qe = _pos_explode(queries.select(id_col, vec_col), vec_col, dim, "v").select(
         F.col(id_col).alias("qid"), "i", "v"
     )
-    qd = (
-        qe.join(F.broadcast(cent), "i")
-        .groupBy("qid", "cid")
-        .agg(F.sum(((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).cast("decimal(38,18)")).alias("dist2"))
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("dist2"), F.col("cid"))
-    probes = (
-        qd.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select("qid", "cid")
-    )
+    probes = _nearest(_sq_dists(qe, cent, "qid"), "qid", n_probe)
     cands = (
         inv.join(F.broadcast(probes), "cid")
         .filter(F.col("qid") != F.col(id_col))
         .select("qid", id_col)
         .distinct()
     )
-    # Round-6 rerank: projection-level chain dots (bit-identical to the
-    # decimal SUM aggregate they replace — see the module header and
-    # test_projection_chain_dot_bitwise_matches_decimal_sum_agg), with
-    # the corpus norm computed once per corpus row BEFORE the candidate
-    # join and the query norm riding on the broadcast side. Replaces the
-    # dim-fold position explode + dot aggregate + two norm joins.
-    qv = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qe"),
-        _nrm2_col(vec_col, dim).cast("double").alias("qn"),
+    pairs = cands.join(_corpus_side(corpus, vec_col, id_col, dim), id_col).join(
+        F.broadcast(_query_side(queries, vec_col, id_col, dim)), "qid"
     )
-    nc = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _nrm2_col(vec_col, dim).cast("double").alias("nrm2"),
-    )
-    scored = (
-        cands.join(nc, id_col)
-        .join(F.broadcast(qv), "qid")
-        .withColumn("dot", _dot_col("qe", vec_col, dim).cast("double"))
-        .withColumn("cosine", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm2")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .withColumn("cosine", F.round("cosine", 6))
-        .select("qid", id_col, "cosine", "nn_rank")
-    )
+    return _cosine_topk(pairs, k, vec_col, id_col, dim)
 
 
 def lsh_topk(
@@ -483,11 +447,6 @@ def lsh_topk(
     qb = hyperplane_buckets(queries, bits, n_bands, vec_col, id_col, dim).select(
         F.col(id_col).alias("qid"), "band", "bucket"
     )
-    qv = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qe"),
-        _nrm2_col(vec_col, dim).cast("double").alias("qn"),
-    )
     cb = hyperplane_buckets(corpus, bits, n_bands, vec_col, id_col, dim)
     cands = (
         cb.join(F.broadcast(qb), ["band", "bucket"])
@@ -495,28 +454,10 @@ def lsh_topk(
         .select("qid", id_col)
         .distinct()
     )
-    # exact rerank as one projection per candidate pair (guide §2.4): the
-    # corpus row carries its own norm, the broadcast query row carries
-    # its vector + norm — no explode, no dot/norm aggregations, no norm
-    # joins. Decimal sums are value-identical to the aggregate form.
-    side = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _nrm2_col(vec_col, dim).cast("double").alias("nrm2"),
+    pairs = cands.join(_corpus_side(corpus, vec_col, id_col, dim), id_col).join(
+        F.broadcast(_query_side(queries, vec_col, id_col, dim)), "qid"
     )
-    scored = (
-        cands.join(side, id_col)
-        .join(F.broadcast(qv), "qid")
-        .withColumn("dot", _dot_col("qe", vec_col, dim).cast("double"))
-        .withColumn("cosine", F.col("dot") / (F.sqrt("qn") * F.sqrt("nrm2")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .withColumn("cosine", F.round("cosine", 6))
-        .select("qid", id_col, "cosine", "nn_rank")
-    )
+    return _cosine_topk(pairs, k, vec_col, id_col, dim)
 
 
 def ann_recall(

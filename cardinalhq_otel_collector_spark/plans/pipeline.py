@@ -42,21 +42,18 @@ from ..config import PipelineConfig
 from ..datagen import role_lookup, routing_rules, tool_lookup
 from ..operators.aggregate import interval_aggregate
 from ..operators.enrich import enrich
-from ..operators.fingerprint import (
-    attach_clusters,
-    cluster_templates,
-    fingerprint,
-    mask_template,
-)
+from ..operators.fingerprint import cluster_templates, fingerprint, mask_template
 from ..operators.parse import parse_keyvalue
 from ..operators.redact import redact
 from ..operators.route import route
-from ..sources.catalog import Catalog, add_time_partitions
+from ..sources.catalog import Catalog, add_time_partitions, time_partition_cols
 from .lineage import LineageLog
 
 __all__ = [
     "decorate",
     "slim_facts",
+    "routed_partition_cols",
+    "AGG_KEYS",
     "run_pipeline",
     "read_routed_with_clusters",
     "ROUTED_TABLE",
@@ -76,6 +73,16 @@ def slim_facts(df: DataFrame) -> DataFrame:
     return df.drop("template").withColumn(
         "text_redacted", F.when(F.col("has_pii"), F.col("text_redacted"))
     )
+
+
+def routed_partition_cols(granularity: str) -> list[str]:
+    """The routed fact table's directory layout — sink, then the time
+    partitions — shared by the batch and streaming writers."""
+    return ["sink", *time_partition_cols(granularity)]
+
+
+# S7 group keys (besides the interval bucket), batch and streaming alike
+AGG_KEYS = ["sink", "conv_id", "tool"]
 
 ROUTED_TABLE = "routed"
 AGG_TABLE = "sink_aggregates"
@@ -134,25 +141,18 @@ def marshal_routed(df: DataFrame, fmt: str, sink: str) -> DataFrame:
     return out.select("p_date", "value")
 
 
-def decorate(
-    transcripts: DataFrame,
-    config: PipelineConfig,
-    cluster: bool = True,
-) -> DataFrame:
+def decorate(transcripts: DataFrame, config: PipelineConfig) -> DataFrame:
     """S1-S5: the chqdecorator-equivalent transform chain — one declarative
-    plan, all JVM expressions (the only collect is over distinct templates
-    in S2).
+    plan, all JVM expressions, no collect.
 
-    ``cluster=False`` defers the S2 cluster-map join (pass 2): callers that
-    persist the stream first should apply ``attach_clusters`` afterwards so
-    the distinct-template scan reads the cache instead of recomputing the
-    chain (run_pipeline does this).
+    S2 here is pass 1 only (template + fingerprint per row). The cluster
+    map (pass 2) is not joined into the facts: run_pipeline's clusters
+    stage writes it as a dimension table from the routed table, and
+    ``read_routed_with_clusters`` joins it back at read time.
     """
     spark = transcripts.sparkSession
     df = parse_keyvalue(transcripts, config.parse_fields)           # S1
     df = fingerprint(df)                                            # S2 pass 1
-    if cluster:
-        df = attach_clusters(df)                                    # S2 pass 2
     df = redact(df, config.pii_patterns)                            # S3
     df = enrich(df, tool_lookup(spark), "tool",
                 fill_unknown={"tool_category": "unknown", "tool_owner": "unknown", "valid": False})  # S4
@@ -205,7 +205,7 @@ def run_pipeline(
         if name == fail_after_stage:
             raise RuntimeError(f"injected failure after {name}")
 
-    decorated = slim_facts(decorate(transcripts, config, cluster=False))
+    decorated = slim_facts(decorate(transcripts, config))
     if config.salt_partitions > 0:
         # bound partition size under hot conversations: spread each conv's
         # turns over salt buckets; sink stays the leading key so the
@@ -215,9 +215,7 @@ def run_pipeline(
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(config.salt_partitions)),
         )
     routed = add_time_partitions(decorated, granularity=config.partition_granularity)
-    part_cols = ["sink", "p_date"] + (
-        ["p_hour"] if config.partition_granularity in ("hour", "minute") else []
-    ) + (["p_minute"] if config.partition_granularity == "minute" else [])
+    part_cols = routed_partition_cols(config.partition_granularity)
     # sink labels are closed over the rule table, so the metric set is static
     sinks = [r["sink"] for r in config.rules] + [config.default_sink]
 
@@ -273,9 +271,9 @@ def run_pipeline(
 
     # ---- S7: per-sink windowed aggregate counts ----------------------------
     def write_aggregates():
-        facts = read_routed().select("sink", "conv_id", "tool", "ts")
+        facts = read_routed().select(*AGG_KEYS, "ts")
         aggs, obs = _observe_rows(
-            interval_aggregate(facts, keys=["sink", "conv_id", "tool"], interval=config.agg_interval),
+            interval_aggregate(facts, keys=AGG_KEYS, interval=config.agg_interval),
             sinks,
         )
         catalog.write(aggs, AGG_TABLE, partition_by=["sink"])

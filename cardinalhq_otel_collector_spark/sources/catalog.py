@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["Catalog", "add_time_partitions", "validate_compression", "VALID_COMPRESSION"]
+__all__ = ["Catalog", "add_time_partitions", "time_partition_cols", "validate_compression", "VALID_COMPRESSION"]
 
 # A13 — the compression surface (awss3exporter config.go:148-153 whitelists
 # gzip|zstd|uncompressed and rejects everything else at config-validate
@@ -48,17 +48,29 @@ def validate_compression(compression: str | None) -> str | None:
     return "uncompressed" if c == "none" else c
 
 
+_TIME_FORMATS = {"p_date": "yyyy-MM-dd", "p_hour": "HH", "p_minute": "mm"}
+
+
+def time_partition_cols(granularity: str) -> list[str]:
+    """The time-partition columns for ``granularity``, coarsest first: the
+    one definition of the layout ``add_time_partitions`` derives and the
+    batch and streaming routed writers partition by."""
+    cols = ["p_date"]
+    if granularity in ("hour", "minute"):
+        cols.append("p_hour")
+    if granularity == "minute":
+        cols.append("p_minute")
+    return cols
+
+
 def add_time_partitions(df: DataFrame, ts_col: str = "ts", granularity: str = "hour") -> DataFrame:
     """Derive the reference's default partition columns from the event time
     (partition.go:59-134 strftime default year/month/day/hour[/minute]);
     UTC is pinned at the session level. On Iceberg this would be hidden
     partitioning (``days(ts)``/``hours(ts)``) instead of physical columns."""
-    out = df.withColumn("p_date", F.date_format(ts_col, "yyyy-MM-dd"))
-    if granularity in ("hour", "minute"):
-        out = out.withColumn("p_hour", F.date_format(ts_col, "HH"))
-    if granularity == "minute":
-        out = out.withColumn("p_minute", F.date_format(ts_col, "mm"))
-    return out
+    for c in time_partition_cols(granularity):
+        df = df.withColumn(c, F.date_format(ts_col, _TIME_FORMATS[c]))
+    return df
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -193,19 +205,3 @@ class Catalog:
             return self.spark.table(self._ident(table))
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self.path(table))
-
-    def read_partition(self, table: str, **partition_values: str) -> DataFrame:
-        """Partition-pruned read, e.g. read_partition('routed', sink='errors').
-
-        basePath keeps the partition columns in the schema. On Iceberg the
-        same pruning is a filter — the manifest-level partition stats prune
-        files before any task launches."""
-        if self.use_iceberg:
-            df = self.read(table)
-            for k, v in partition_values.items():
-                df = df.filter(F.col(k) == v)
-            return df
-        sub = "/".join(f"{k}={v}" for k, v in partition_values.items())
-        return self.spark.read.option("basePath", self.path(table)).parquet(
-            os.path.join(self.path(table), sub)
-        )

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..operators.aggregate import interval_aggregate
-from ..plans.pipeline import decorate, slim_facts
+from ..plans.pipeline import AGG_KEYS, decorate, routed_partition_cols, slim_facts
 from ..sources.catalog import add_time_partitions
 
 __all__ = ["TRANSCRIPT_SCHEMA", "stream_transcripts", "run_streaming_pipeline", "streaming_dedup", "streaming_sessions", "stream_stream_interval_join"]
@@ -80,7 +80,7 @@ def run_streaming_pipeline(
 
     config = (config or PipelineConfig(rules=routing_rules())).validate()
     stream = stream_transcripts(spark, source_dir)
-    decorated = decorate(stream, config, cluster=False)
+    decorated = decorate(stream, config)
 
     # Same slimming projection as the batch routed table — the two fact
     # tables are twins and must stay schema/content-identical so consumers
@@ -93,7 +93,7 @@ def run_streaming_pipeline(
         routed.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "routed_stream"))
         .option("checkpointLocation", os.path.join(out_dir, "_chk_routed"))
-        .partitionBy("sink", "p_date")
+        .partitionBy(*routed_partition_cols(config.partition_granularity))
         .outputMode("append")
         .trigger(**trigger)
         .start()
@@ -102,9 +102,9 @@ def run_streaming_pipeline(
     # the batch S7 rollup, over a watermarked stream
     aggs = interval_aggregate(
         decorated.withWatermark("ts", watermark),
-        keys=["sink", "conv_id", "tool"],
+        keys=AGG_KEYS,
         interval=config.agg_interval,
-    ).select("bucket_start", "sink", "conv_id", "tool", "n")
+    ).select("bucket_start", *AGG_KEYS, "n")
     q_aggs = (
         aggs.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "agg_stream"))

@@ -98,6 +98,39 @@ def test_ivf_topk_exact_on_separated_clusters(spark):
     assert sorted(map(tuple, again)) == sorted(map(tuple, approx))
 
 
+def test_ivf_full_probe_equals_brute_force_with_ties(spark):
+    """Probing every centroid makes the IVF candidate set the whole corpus,
+    and IVF reranks through the same exact cosine top-k as brute force —
+    so the two must agree row for row, cosine ties (broken by id at the
+    k cut) included."""
+    from cardinalhq_otel_collector_spark.operators.similarity import ivf_topk
+
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0],
+        [1.0, 1.0, 0.0, 0.0],
+        [1.0, 0.0, 1.0, 0.0],   # ties 1 for query 0
+        [0.0, 1.0, 1.0, 0.0],
+        [2.0, 2.0, 0.0, 0.0],   # parallel to 1: ties it for every query
+        [0.0, 0.0, 1.0, 1.0],
+        [0.0, 0.0, 0.0, 1.0],
+        [1.0, 0.0, 0.0, 1.0],   # ties 1, 2, 4 for query 0, past the k cut
+        [0.5, 0.5, 0.5, 0.5],
+        [1.0, 1.0, 1.0, 1.0],   # parallel to 8
+        [-1.0, 0.0, 0.0, 0.0],
+        [0.0, -1.0, 1.0, 0.0],
+    ]
+    emb = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    q = emb.filter(F.col("vec_id").isin([0, 1, 8]))
+    cols = ["qid", "vec_id", "cosine", "nn_rank"]
+
+    exact = sorted(map(tuple, brute_force_topk(q, emb, k=3, dim=4).select(cols).collect()))
+    full = ivf_topk(q, emb, k=3, n_centroids=4, n_probe=4, dim=4).select(cols).collect()
+    assert sorted(map(tuple, full)) == exact
+    # query 0: four candidates tie at 1/sqrt(2); the k cut keeps the three
+    # smallest ids
+    assert [(r[1], r[2]) for r in exact if r[0] == 0] == [(1, 0.707107), (2, 0.707107), (4, 0.707107)]
+
+
 def test_embedding_neardup_finds_planted_pair(spark):
     """A planted near-duplicate (tiny perturbation of another vector) must
     surface as a pair at threshold 0.9; orthogonal vectors must not."""

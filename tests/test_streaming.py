@@ -22,7 +22,7 @@ def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
         os.path.join(out, "routed_stream")
     )
     cfg = PipelineConfig(rules=routing_rules()).validate()
-    batch = decorate(transcripts_df, cfg, cluster=False)
+    batch = decorate(transcripts_df, cfg)
 
     # stateless path: streaming output ≡ batch output, row for row
     a = sorted(
@@ -53,6 +53,25 @@ def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
     assert len(emitted) > 0
     for k, n in emitted.items():
         assert expected[k] == n
+
+
+def test_streaming_routed_layout_matches_batch_at_hour(spark, tmp_path):
+    """At hour granularity the streaming routed sink partitions by the same
+    directories as the batch routed table: sink=*/p_date=*/p_hour=*."""
+    import glob
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    transcripts(spark, n_convs=20, partitions=2).write.parquet(src)
+    cfg = PipelineConfig(rules=routing_rules(), partition_granularity="hour")
+
+    run_streaming_pipeline(spark, src, out, config=cfg, watermark="1 minute")
+
+    routed_dir = os.path.join(out, "routed_stream")
+    leaves = glob.glob(os.path.join(routed_dir, "sink=*", "p_date=*", "p_hour=*", "*.parquet"))
+    assert leaves
+    # p_hour is a directory, not a data column inside the files
+    assert "p_hour" not in spark.read.parquet(leaves[0]).columns
 
 
 def test_streaming_restart_is_exactly_once(spark, tmp_path):
