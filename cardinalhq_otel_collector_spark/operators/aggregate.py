@@ -69,6 +69,9 @@ def interval_aggregate(
 
     Output carries ``bucket_start`` (= interval start, the group-key
     timestamp rule of aggregate.go:64-67) — aliased for oracle parity.
+    ``n`` counts rows, NULL values included; ``total`` is the SQL SUM,
+    which ignores NULL values. Over a watermarked stream in append mode
+    each bucket emits exactly once, when the watermark passes its end.
     """
     aggs = [F.count(F.lit(1)).alias("n")]
     if value_col is not None:

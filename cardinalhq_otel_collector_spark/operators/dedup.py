@@ -224,7 +224,6 @@ def neardup_dedup(
     id_col: str = "doc_id",
     left_col: str = "id_a",
     right_col: str = "id_b",
-    driver_max_rows: int = 400_000,
 ) -> DataFrame:
     """The actual deduplicate step: docs + candidate pairs →
     + cluster_id (own id when unpaired) + is_canonical (keep rule: the
@@ -234,9 +233,9 @@ def neardup_dedup(
     Scale shape: the mapping is pair-graph-sized (≪ corpus) and joins
     broadcast below the driver bound; the docs side never shuffles.
     """
-    comp = neardup_components(
-        pairs, left_col, right_col, driver_max_rows
-    ).withColumnRenamed("fingerprint", id_col)
+    comp = neardup_components(pairs, left_col, right_col).withColumnRenamed(
+        "fingerprint", id_col
+    )
     return (
         docs.join(comp, id_col, "left")
         .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))

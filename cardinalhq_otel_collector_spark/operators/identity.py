@@ -28,16 +28,12 @@ def stitch_identities(
     edges: DataFrame,
     left_col: str,
     right_col: str,
-    driver_max_rows: int = 400_000,
 ) -> DataFrame:
     """(node_id, identity_id) for every node appearing in ≥1 edge;
     identity_id = min node id of the connected component."""
     from cardinalhq_otel_collector_spark.operators.dedup import neardup_components
 
-    out = neardup_components(
-        edges, left_col=left_col, right_col=right_col,
-        driver_max_rows=driver_max_rows,
-    )
+    out = neardup_components(edges, left_col=left_col, right_col=right_col)
     return out.select(
         F.col("fingerprint").alias("node_id"),
         F.col("cluster_id").alias("identity_id"),

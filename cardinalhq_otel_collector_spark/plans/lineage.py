@@ -30,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..session import local_frame
 from ..sources.catalog import Catalog
@@ -38,8 +39,14 @@ __all__ = ["LineageLog"]
 
 LINEAGE_TABLE = "_lineage"
 
-_SCHEMA = (
-    "run_id string, stage string, sink string, rows_in long, rows_out long"
+# committed_at is TIMESTAMP (LTZ): the pyarrow commit writes it as
+# timestamp[us, tz=UTC], which round-trips as TIMESTAMP like Spark-written
+# _lineage files; a naive timestamp would read back as TIMESTAMP_NTZ and
+# mix logical types within one directory.
+_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("run_id", "stage", "sink")]
+    + [T.StructField(c, T.LongType()) for c in ("rows_in", "rows_out")]
+    + [T.StructField("committed_at", T.TimestampType())]
 )
 
 
@@ -49,7 +56,7 @@ class LineageLog:
 
     def read(self) -> DataFrame:
         if not self.catalog.exists(LINEAGE_TABLE):
-            return local_frame(self.catalog.spark, [], _SCHEMA + ", committed_at timestamp")
+            return local_frame(self.catalog.spark, [], _SCHEMA)
         return self.catalog.read(LINEAGE_TABLE)
 
     def committed_stages(self, run_id: str) -> set[str]:
@@ -63,36 +70,25 @@ class LineageLog:
     ) -> None:
         """Record one committed stage: a row per (sink, rows_out) pair; sink
         None for a stage whose table is not split by sink."""
-        rows = [(run_id, stage, s, None, n) for s, n in per_sink_counts]
+        now = datetime.datetime.now(datetime.timezone.utc)
+        rows = [(run_id, stage, s, None, n, now) for s, n in per_sink_counts]
         if self.catalog.use_iceberg:
             # Iceberg tables are catalog-tracked: a stray file is invisible
             # without a snapshot commit, so route through the catalog (one
             # tiny append job; the snapshot IS the post-commit notification)
-            df = local_frame(self.catalog.spark, rows, _SCHEMA).withColumn(
-                "committed_at", F.current_timestamp()
+            self.catalog.append(
+                local_frame(self.catalog.spark, rows, _SCHEMA), LINEAGE_TABLE
             )
-            self.catalog.append(df, LINEAGE_TABLE)
             return
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         path = self.catalog.path(LINEAGE_TABLE)
         os.makedirs(path, exist_ok=True)
-        now = datetime.datetime.now(datetime.timezone.utc)
-        table = pa.table(
-            {
-                "run_id": pa.array([r[0] for r in rows], pa.string()),
-                "stage": pa.array([r[1] for r in rows], pa.string()),
-                "sink": pa.array([r[2] for r in rows], pa.string()),
-                "rows_in": pa.array([r[3] for r in rows], pa.int64()),
-                "rows_out": pa.array([r[4] for r in rows], pa.int64()),
-                # tz=UTC so the column round-trips as TIMESTAMP (LTZ) —
-                # matching both the empty-table fallback schema in read()
-                # and pre-existing Spark-written _lineage files; a naive
-                # pa.timestamp would read back as TIMESTAMP_NTZ and mix
-                # logical types within one directory.
-                "committed_at": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
-            }
+        table = pa.Table.from_pylist(
+            [dict(zip(_SCHEMA.names, r)) for r in rows],
+            schema=to_arrow_schema(_SCHEMA),
         )
         # temp-file + rename for atomic VISIBILITY: a crash mid-write must
         # not leave a truncated parquet part that breaks the next run's

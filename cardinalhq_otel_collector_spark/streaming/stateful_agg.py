@@ -1,22 +1,16 @@
-"""A6 with true timer semantics — applyInPandasWithState interval
-aggregation (SURVEY §2A A3-A6; aggregate.go:31-44 emit scheduling).
+"""Stateful streaming operators with no native Spark primitive —
+applyInPandasWithState gauge compression (``stateful_changes_only``) and
+a per-(key, time bucket) token-bucket throttle (``stateful_rate_limit``).
 
-The window/watermark variant in stream_pipeline.py is the idiomatic Spark
-mapping; this module is the literal port of the reference's stateful
-aggregator for users who need its exact operational shape:
+Each is the streaming twin of a batch operator (resample.changes_only,
+sampling.rate_limit): the per-key GroupState carries what the batch
+operator reads from earlier rows, so with time-split input the emitted
+set equals the batch result. Per-interval counts and sums (A6) are NOT
+here: Spark's watermarked ``window`` aggregate already emits each bucket
+once, so they run through ``operators.aggregate.interval_aggregate``.
 
-  * per-(key) GroupState holds open interval buckets (count + decimal-ish
-    sum as float64 — each bucket's sum accumulates in one task, so there
-    is no cross-partition float reorder);
-  * a bucket emits EXACTLY ONCE, when the event-time watermark passes its
-    end (the reference emits at most once per interval per series,
-    piggybacked on arrivals; the watermark generalizes that with a
-    principled late-data bound);
-  * state for a key times out one interval after the watermark — the
-    per-key TTL the reference's cache carries.
-
-Arrow-batched (applyInPandasWithState hands pandas chunks); the per-bucket
-math is vectorized pandas groupby, no per-row Python.
+Arrow-batched (applyInPandasWithState hands pandas chunks); the per-key
+math is vectorized pandas, no per-row Python.
 """
 
 from __future__ import annotations
@@ -25,111 +19,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = ["stateful_interval_counts", "stateful_changes_only", "stateful_rate_limit"]
-
-# state: parallel arrays of open buckets (start ms, count, sum)
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("starts", T.ArrayType(T.LongType()), True),
-        T.StructField("ns", T.ArrayType(T.LongType()), True),
-        T.StructField("sums", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-
-def _out_schema(keys: list[str], key_types: list[T.DataType]) -> T.StructType:
-    fields = [T.StructField(k, t, True) for k, t in zip(keys, key_types)]
-    return T.StructType(
-        fields
-        + [
-            T.StructField("bucket_start", T.TimestampType(), False),
-            T.StructField("n", T.LongType(), False),
-            T.StructField("total", T.DoubleType(), False),
-        ]
-    )
-
-
-def stateful_interval_counts(
-    stream: DataFrame,
-    keys: list[str],
-    value_col: str,
-    interval_seconds: int = 3600,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """(keys, bucket_start, n, total) — one output row per (key, interval
-    bucket), emitted exactly once when the watermark passes the bucket end.
-    """
-    interval_ms = interval_seconds * 1000
-    key_types = [stream.schema[k].dataType for k in keys]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def emit_frame(items: list[tuple[int, int, float]]) -> pd.DataFrame:
-            data = {k: [kv] * len(items) for k, kv in zip(keys, key)}
-            data["bucket_start"] = [
-                pd.Timestamp(bs, unit="ms") for bs, _, _ in items
-            ]
-            data["n"] = [n for _, n, _ in items]
-            data["total"] = [s for _, _, s in items]
-            return pd.DataFrame(data)
-
-        if state.hasTimedOut:
-            starts, ns, sums = state.get
-            state.remove()
-            items = sorted(zip(starts, ns, sums))
-            if items:
-                yield emit_frame(items)
-            return
-
-        acc: dict[int, tuple[int, float]] = {}
-        if state.exists:
-            starts, ns, sums = state.get
-            acc = {bs: (n, s) for bs, n, s in zip(starts, ns, sums)}
-        for pdf in pdfs:
-            ts_ms = pdf[ts_col].astype("datetime64[ms]").astype("int64")
-            bucket = (ts_ms // interval_ms) * interval_ms
-            g = pd.DataFrame({"b": bucket, "v": pdf[value_col].astype("float64")})
-            agg = g.groupby("b")["v"].agg(["count", "sum"])
-            for bs, row in agg.iterrows():
-                n0, s0 = acc.get(int(bs), (0, 0.0))
-                acc[int(bs)] = (n0 + int(row["count"]), s0 + float(row["sum"]))
-
-        wm = state.getCurrentWatermarkMs()
-        closed = sorted(
-            (bs, n, s) for bs, (n, s) in acc.items() if bs + interval_ms <= wm
-        )
-        open_ = {bs: v for bs, v in acc.items() if bs + interval_ms > wm}
-        if open_:
-            starts = sorted(open_)
-            state.update(
-                (starts, [open_[b][0] for b in starts], [open_[b][1] for b in starts])
-            )
-            # TTL: fire one interval past the newest open bucket's end (and
-            # strictly past the current watermark, as the API requires)
-            state.setTimeoutTimestamp(max(max(starts) + 2 * interval_ms, wm + 1))
-        elif state.exists:
-            state.remove()
-        if closed:
-            yield emit_frame(closed)
-
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_out_schema(keys, key_types),
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
+__all__ = ["stateful_changes_only", "stateful_rate_limit"]
 
 _CHG_STATE_SCHEMA = T.StructType(
     [

@@ -8,12 +8,19 @@ actual executed plans (SURVEY.md §4):
   * the S2 MinHash bands are one aggregation (one exchange, no join), and
     the MinHash/SimHash candidate bands are one projection (no union)
   * partitioned reads prune to one sink directory
+
+plus source gates on the streaming code: one replay harness in the
+entry module, and no pandas state machine that re-implements the
+native watermarked interval aggregate.
 """
 
+import ast
 import os
+import pathlib
 
 from pyspark.sql import functions as F
 
+import cardinalhq_otel_collector_spark as pkg
 from cardinalhq_otel_collector_spark.config import PipelineConfig
 from cardinalhq_otel_collector_spark.datagen import routing_rules, tool_lookup
 from cardinalhq_otel_collector_spark.operators.dedup import (
@@ -125,3 +132,49 @@ def test_aggregate_is_partial_then_final(spark, transcripts_df):
     plan = _plan(agg)
     # two HashAggregate nodes around the exchange = map-side combine
     assert plan.count("HashAggregate") >= 2
+
+
+def test_entry_stages_and_sinks_streams_in_one_place():
+    """Every streaming board entry goes through _replay/_drain: the entry
+    module starts a streaming sink once and stages microbatch files
+    (mtime-ordered) once."""
+    src = pathlib.Path(pkg.__file__).parent.parent / "__spark_entry__.py"
+    tree = ast.parse(src.read_text())
+    attrs = [n for n in ast.walk(tree) if isinstance(n, ast.Attribute)]
+    assert sum(a.attr == "writeStream" for a in attrs) == 1
+    assert sum(
+        a.attr == "utime" and getattr(a.value, "id", "") == "os" for a in attrs
+    ) == 1
+
+
+def test_no_pandas_state_machine_for_interval_buckets():
+    """A6 (emit each interval bucket once) is the native watermarked
+    window aggregate. No applyInPandasWithState function in the package
+    may emit interval buckets on event-time timers: that is the same rows
+    with a per-key Python loop in the way."""
+    root = pathlib.Path(pkg.__file__).parent
+    timer_names = {"EventTimeTimeout", "getCurrentWatermarkMs", "bucket_start"}
+    seen, forks = set(), set()
+    for p in root.rglob("*.py"):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(ast.walk(fn))
+            if not any(
+                isinstance(n, ast.Attribute) and n.attr == "applyInPandasWithState"
+                for n in nodes
+            ):
+                continue
+            name = f"{p.relative_to(root)}:{fn.name}"
+            seen.add(name)
+            used = {getattr(n, "attr", None) for n in nodes} | {
+                n.value for n in nodes if isinstance(n, ast.Constant)
+            }
+            if used & timer_names:
+                forks.add(name)
+    # the surviving stateful operators must be seen, or the walk is out of date
+    assert seen == {
+        "streaming/stateful_agg.py:stateful_changes_only",
+        "streaming/stateful_agg.py:stateful_rate_limit",
+    }, seen
+    assert not forks, forks

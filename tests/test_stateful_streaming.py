@@ -1,13 +1,12 @@
-"""applyInPandasWithState interval aggregation (A6 timer semantics):
-buckets emit exactly once when the watermark passes; per-key state TTLs."""
+"""Streaming interval aggregation (A6 emit scheduling): over a
+watermarked stream, ``interval_aggregate`` in append mode emits each
+bucket exactly once, when the watermark passes its end."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from cardinalhq_otel_collector_spark.streaming.stateful_agg import (
-    stateful_interval_counts,
-)
+from cardinalhq_otel_collector_spark.operators.aggregate import interval_aggregate
 
 BASE = 1767225600  # 2026-01-01T00:00:00Z
 
@@ -22,9 +21,9 @@ def _run_once(spark, src, out, chk):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = stateful_interval_counts(
-        stream, keys=["k"], value_col="value", interval_seconds=3600,
-        watermark="5 minutes",
+    agg = interval_aggregate(
+        stream.withWatermark("ts", "5 minutes"),
+        keys=["k"], interval="1 hour", value_col="value",
     )
     q = (
         agg.writeStream.format("parquet")
@@ -44,8 +43,12 @@ def test_stateful_counts_emit_once_per_bucket(spark, tmp_path):
         spark.createDataFrame(rows, "k string, value double, ts timestamp")\
             .coalesce(1).write.mode("append").parquet(src)
 
-    # batch 1: two keys in hour-bucket 0 (watermark still at epoch)
-    write([("a", 1.0, _ts(10)), ("a", 2.0, _ts(20)), ("b", 5.0, _ts(30))])
+    # batch 1: two keys in hour-bucket 0 (watermark still at epoch); the
+    # NULL value counts as a row in n but adds nothing to total
+    write([
+        ("a", 1.0, _ts(10)), ("a", 2.0, _ts(20)), ("a", None, _ts(25)),
+        ("b", 5.0, _ts(30)),
+    ])
     _run_once(spark, src, out, chk)
     assert spark.read.parquet(out).count() == 0  # nothing closed yet
 
@@ -62,7 +65,7 @@ def test_stateful_counts_emit_once_per_bucket(spark, tmp_path):
 
     rows = spark.read.parquet(out).collect()
     got = {(r["k"], r["bucket_start"].strftime("%H")): (r["n"], r["total"]) for r in rows}
-    assert got[("a", "00")] == (2, 3.0)
+    assert got[("a", "00")] == (3, 3.0)
     assert got[("b", "00")] == (1, 5.0)
     # the future buckets stay open (watermark has not passed hour 03)
     assert not any(h == "03" for _, h in got)
