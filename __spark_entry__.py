@@ -4,7 +4,8 @@ Every ``queries()`` entry calls the LIBRARY operators
 (``cardinalhq_otel_collector_spark.operators.*``) over the driver's parquet
 tables; the matching ``oracle_sql()`` string is the same computation in
 DuckDB SQL. A regression in any operator turns its CORRECTNESS row red —
-the oracle validates this repo's code, not Spark's SQL engine.
+the oracle validates this repo's code, not Spark's SQL engine. Both
+dicts are read from one table, ``_board()``, that names each entry once.
 
 Column names/aliases are identical on both sides. Floating-point
 aggregates are engine-portable: sums accumulate in DECIMAL (exact) and cast
@@ -17,6 +18,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# a board entry's Spark side: (session, sf_dir) -> result frame
+_Query = Callable[[SparkSession, str], DataFrame]
 
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -3414,11 +3418,11 @@ FROM documents WHERE doc_id < 500
 
 
 # ---------------------------------------------------------------------------
-# lib_* oracles: full pipeline per-sink counts + template clustering, both
-# over COMMITTED parquet fixtures (fixtures/*.parquet) so DuckDB reads the
-# identical bytes Spark does. Regex tables are imported from the library
-# (the _template_mining_duck precedent); the SQL itself is authored
-# independently of the Spark plan.
+# lib_* oracles: the pipeline entries (per-sink counts, marshal lines) and
+# template clustering over COMMITTED parquet fixtures (fixtures/*.parquet), so
+# DuckDB reads the identical bytes Spark does; the streaming entries' emitted
+# sets over the events table. Regexes and the route CASE are the frozen
+# literals above; the SQL is authored independently of the Spark plan.
 # ---------------------------------------------------------------------------
 
 
@@ -3429,51 +3433,15 @@ def _pii_mask_sql(expr: str) -> str:
     return expr
 
 
-def _lib_pipeline_duck() -> str:
+def _routed_fixture_duck() -> str:
+    """The routed transcript fixture as the CTE chain ``t → p → parsed →
+    enriched → routed``: parse_keyvalue's ``level`` and ``service`` (one
+    regex each, quotes stripped, '' → NULL), the PII mask, the tool
+    category, has_pii and the frozen first-match-wins route CASE. The
+    batch, marshal and streaming pipeline oracles each add their own
+    final SELECT over ``routed``."""
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
 
-    # parse_keyvalue 'level' extraction: one regex, strip quotes, ''→NULL
-    case_sql = _ROUTING_CASE_ORACLE  # first-match-wins CASE, frozen literal
-    return f"""
-WITH t AS (SELECT * FROM read_parquet('{TRANSCRIPTS_FIXTURE}')),
-p AS (
-  SELECT *, regexp_extract(text, '(?:^|\\s)level=("[^"]*"|\\S+)', 1) AS _v FROM t
-),
-parsed AS (
-  SELECT *,
-         nullif(CASE WHEN _v LIKE '"%"' AND length(_v) >= 2
-                     THEN substr(_v, 2, length(_v) - 2) ELSE _v END, '') AS parsed_level,
-         {_pii_mask_sql('text')} AS _masked
-  FROM p
-),
-enriched AS (
-  SELECT *,
-         CASE tool WHEN 'search' THEN 'search' WHEN 'browser' THEN 'web'
-              WHEN 'python' THEN 'compute' WHEN 'calculator' THEN 'compute'
-              ELSE 'unknown' END AS tool_category,
-         (_masked <> text) AS has_pii
-  FROM parsed
-),
-routed AS (SELECT *, {case_sql} AS sink FROM enriched),
-agg AS (
-  SELECT sink, conv_id, tool, date_trunc('hour', ts) AS bucket_start, COUNT(*) AS n
-  FROM routed GROUP BY 1, 2, 3, 4
-)
-SELECT sink, CAST(SUM(n) AS BIGINT) AS turns, COUNT(*) AS groups
-FROM agg GROUP BY sink
-"""
-
-
-def _marshal_sink_duck() -> str:
-    """Oracle for the S6m sink-boundary marshal stage: the full routed
-    pipeline (parse → mask → enrich → route, same frozen-literal CTEs as
-    _lib_pipeline_duck) composed with the sumo_ic line rendering
-    (_SUMO_DUCK's date/json logic) over the 'errors' sink only — so the
-    check covers marshal-at-the-sink END TO END, not just the marshal op
-    in isolation."""
-    from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
-
-    case_sql = _ROUTING_CASE_ORACLE
     return f"""
 WITH t AS (SELECT * FROM read_parquet('{TRANSCRIPTS_FIXTURE}')),
 p AS (
@@ -3499,8 +3467,29 @@ enriched AS (
          (_masked <> text) AS has_pii
   FROM parsed
 ),
-routed AS (SELECT *, {case_sql} AS sink FROM enriched)
-SELECT '{{"date": "' || strftime(ts, '%Y-%m-%d %H:%M:%S')
+routed AS (SELECT *, {_ROUTING_CASE_ORACLE} AS sink FROM enriched)"""
+
+
+def _lib_pipeline_duck() -> str:
+    """Per-sink turns and hourly groups of the batch pipeline."""
+    return _routed_fixture_duck() + """,
+agg AS (
+  SELECT sink, conv_id, tool, date_trunc('hour', ts) AS bucket_start, COUNT(*) AS n
+  FROM routed GROUP BY 1, 2, 3, 4
+)
+SELECT sink, CAST(SUM(n) AS BIGINT) AS turns, COUNT(*) AS groups
+FROM agg GROUP BY sink
+"""
+
+
+def _marshal_sink_duck() -> str:
+    """Oracle for the S6m sink-boundary marshal stage: the routed fixture
+    composed with the sumo_ic line rendering (_SUMO_DUCK's date/json
+    logic) over the 'errors' sink only — so the check covers
+    marshal-at-the-sink END TO END, not just the marshal op in
+    isolation."""
+    return _routed_fixture_duck() + """
+SELECT '{"date": "' || strftime(ts, '%Y-%m-%d %H:%M:%S')
        || CASE WHEN extract(microsecond FROM ts) % 1000000 > 0
                THEN '.' || rtrim(lpad(CAST(extract(microsecond FROM ts) % 1000000 AS VARCHAR), 6, '0'), '0')
                ELSE '' END
@@ -3509,7 +3498,7 @@ SELECT '{{"date": "' || strftime(ts, '%Y-%m-%d %H:%M:%S')
        || ',"sourceCategory":' || to_json(coalesce(tool, 'unknown'))
        || ',"fields":' || to_json(struct_pack(tool_category := tool_category))
        || ',"message":' || to_json(struct_pack(conv_id := conv_id, log := _masked))
-       || '}}' AS line
+       || '}' AS line
 FROM routed WHERE sink = 'errors'
 """
 
@@ -3518,30 +3507,8 @@ def _lib_streaming_duck() -> str:
     """Per-sink routed counts of the streaming pipeline — identical route
     semantics to the batch oracle (the streaming machinery is checkpoint/
     trigger plumbing; the routed OUTPUT is plain SQL over the fixture)."""
-    from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
-
-    case_sql = _ROUTING_CASE_ORACLE
-    return f"""
-WITH t AS (SELECT * FROM read_parquet('{TRANSCRIPTS_FIXTURE}')),
-p AS (
-  SELECT *, regexp_extract(text, '(?:^|\\s)level=("[^"]*"|\\S+)', 1) AS _v FROM t
-),
-parsed AS (
-  SELECT *,
-         nullif(CASE WHEN _v LIKE '"%"' AND length(_v) >= 2
-                     THEN substr(_v, 2, length(_v) - 2) ELSE _v END, '') AS parsed_level,
-         {_pii_mask_sql('text')} AS _masked
-  FROM p
-),
-enriched AS (
-  SELECT *,
-         CASE tool WHEN 'search' THEN 'search' WHEN 'browser' THEN 'web'
-              WHEN 'python' THEN 'compute' WHEN 'calculator' THEN 'compute'
-              ELSE 'unknown' END AS tool_category,
-         (_masked <> text) AS has_pii
-  FROM parsed
-)
-SELECT {case_sql} AS sink, COUNT(*) AS turns FROM enriched GROUP BY 1
+    return _routed_fixture_duck() + """
+SELECT sink, COUNT(*) AS turns FROM routed GROUP BY 1
 """
 
 
@@ -3598,6 +3565,67 @@ SELECT MIN(c.template) AS rep_template,
        COUNT(*) AS n_templates, CAST(SUM(n.n) AS BIGINT) AS n_rows
 FROM {prev} c JOIN counts n USING(template)
 GROUP BY c.label
+"""
+
+
+_STREAM_DEDUP_DUCK = "SELECT event_id, user_id FROM events"
+
+# session_window merges touching windows: only a gap STRICTLY
+# greater than the gap parameter splits (same rule as batch
+# sessionize) — pinned by test_streaming_sessions_gap_boundary
+_STREAM_SESSIONS_DUCK = """
+WITH o AS (
+  SELECT user_id, ts, event_id,
+         lag(epoch_us(ts)) OVER (PARTITION BY user_id
+                                 ORDER BY ts, event_id) AS prev_us,
+         epoch_us(ts) AS cur_us
+  FROM events),
+f AS (SELECT user_id, ts, event_id,
+        CASE WHEN prev_us IS NULL OR cur_us - prev_us > 28800000000
+             THEN 1 ELSE 0 END AS ns
+      FROM o),
+s AS (SELECT user_id, ts,
+        SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                      ROWS UNBOUNDED PRECEDING) AS sid
+      FROM f)
+SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
+FROM s GROUP BY user_id, sid
+"""
+
+# stream-stream interval join: emitted inner matches over a fully
+# replayed source equal the batch range join, stated naively
+_STREAM_JOIN_DUCK = """
+SELECT c.event_id, c.user_id, v.event_id AS view_event_id
+FROM events c JOIN events v
+  ON c.user_id = v.user_id
+ AND c.event_type = 'click' AND v.event_type = 'view'
+ AND epoch_us(v.ts) >= epoch_us(c.ts) - 600000000
+ AND epoch_us(v.ts) <= epoch_us(c.ts) + 600000000
+"""
+
+# the stateful streaming gauge compression replays time-split
+# microbatches, so its emitted set equals the BATCH changes_only
+# — stated here as the plain lag / IS DISTINCT FROM query
+_STREAM_CHANGES_DUCK = """
+WITH s AS (SELECT event_id, user_id, CAST(floor(value) AS BIGINT) AS v,
+             lag(CAST(floor(value) AS BIGINT)) OVER w AS prev,
+             row_number() OVER w AS rn
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+SELECT event_id, user_id, v AS value_floor
+FROM s WHERE rn = 1 OR v IS DISTINCT FROM prev
+"""
+
+# the stateful streaming throttle replays time-split
+# microbatches, so its admitted set equals the BATCH rate_limit
+# — stated as the plain row_number cut over (user, day)
+_STREAM_RATE_LIMIT_DUCK = """
+WITH r AS (SELECT event_id, user_id,
+             row_number() OVER (
+               PARTITION BY user_id, (epoch_us(ts) // 1000000 // 86400)
+               ORDER BY ts, event_id) AS rn
+           FROM events)
+SELECT event_id, user_id FROM r WHERE rn <= 2
 """
 
 
@@ -4319,341 +4347,33 @@ def q_events_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wilson_interval(ev, "variant", "converted")
 
 
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pipeline_route_agg": q_pipeline_route_agg,
-    "route_fanout_counts": q_route_fanout_counts,
-    "interval_agg": q_interval_agg,
-    "cumulative_to_delta": q_cumulative_to_delta,
-    "delta_to_cumulative": q_delta_to_cumulative,
-    "delta_to_rate": q_delta_to_rate,
-    "metric_start_time": q_metric_start_time,
-    "interval_last": q_interval_last,
-    "log_dedup": q_log_dedup,
-    "probabilistic_sample": q_probabilistic_sample,
-    "tail_sample": q_tail_sample,
-    "group_by_conv": q_group_by_conv,
-    "summary_split": q_summary_split,
-    "enrich_lookup": q_enrich_lookup,
-    "tpch_q1": q_tpch_q1,
-    "join_chain": q_join_chain,
-    "template_mining": q_template_mining,
-    "sumo_marshal": q_sumo_marshal,
-    "partition_keys": q_partition_keys,
-    "unroll_tokens": q_unroll_tokens,
-    "otlp_roundtrip": q_otlp_roundtrip,
-    "otlp_proto_marshal": q_otlp_proto_marshal,
-    "genai_normalize": q_genai_normalize,
-    "latency_histogram": q_latency_histogram,
-    "red_metrics": q_red_metrics,
-    "agg_type_override": q_agg_type_override,
-    "exceptions_rollup": q_exceptions_rollup,
-    "round_robin": q_round_robin,
-    "doc_token_count": q_doc_token_count,
-    "doc_quality": q_doc_quality,
-    "doc_lang_id": q_doc_lang_id,
-    "doc_exact_dedup": q_doc_exact_dedup,
-    "doc_ngram_jaccard": q_doc_ngram_jaccard,
-    "doc_minhash_lsh": q_doc_minhash_lsh,
-    "doc_simhash": q_doc_simhash,
-    "doc_simhash_candidates": q_doc_simhash_candidates,
-    "doc_decontaminate": q_doc_decontaminate,
-    "events_asof_join": q_events_asof_join,
-    "doc_quota_sample": q_doc_quota_sample,
-    "doc_vocab": q_doc_vocab,
-    "doc_repetition": q_doc_repetition,
-    "events_sessionize": q_events_sessionize,
-    "events_anomaly": q_events_anomaly,
-    "doc_chunk": q_doc_chunk,
-    "doc_neardup_dedup": q_doc_neardup_dedup,
-    "doc_normalize": q_doc_normalize,
-    "doc_pmi": q_doc_pmi,
-    "events_rate_limit": q_events_rate_limit,
-    "events_heavy_hitters": q_events_heavy_hitters,
-    "events_session_stats": q_events_session_stats,
-    "events_retention": q_events_retention,
-    "doc_split_assign": q_doc_split_assign,
-    "doc_pack_sequences": q_doc_pack_sequences,
-    "doc_tfidf_topk": q_doc_tfidf_topk,
-    "events_percentiles": q_events_percentiles,
-    "events_range_join": q_events_range_join,
-    "events_funnel": q_events_funnel,
-    "events_transitions": q_events_transitions,
-    "part_edit_distance": q_part_edit_distance,
-    "events_sliding_window": q_events_sliding_window,
-    "events_new_users": q_events_new_users,
-    "events_pivot": q_events_pivot,
-    "doc_entropy": q_doc_entropy,
-    "events_json_attrs": q_events_json_attrs,
-    "events_interarrival": q_events_interarrival,
-    "doc_weighted_sample": q_doc_weighted_sample,
-    "events_alerts": q_events_alerts,
-    "events_decimate": q_events_decimate,
-    "events_paths": q_events_paths,
-    "doc_remove_boilerplate": q_doc_remove_boilerplate,
-    "transcripts_integrity": q_transcripts_integrity,
-    "events_winsorize": q_events_winsorize,
-    "events_scd2_enrich": q_events_scd2_enrich,
-    "events_kmv_distinct": q_events_kmv_distinct,
-    "doc_prefix_jaccard": q_doc_prefix_jaccard,
-    "events_span_union": q_events_span_union,
-    "events_locf_resample": q_events_locf_resample,
-    "events_cms_counts": q_events_cms_counts,
-    "events_twa": q_events_twa,
-    "doc_mixture": q_doc_mixture,
-    "events_mad_outliers": q_events_mad_outliers,
-    "events_exp_histogram": q_events_exp_histogram,
-    "events_rollup": q_events_rollup,
-    "events_bloom_prefilter": q_events_bloom_prefilter,
-    "events_skew_report": q_events_skew_report,
-    "events_table_diff": q_events_table_diff,
-    "events_reply_latency": q_events_reply_latency,
-    "conv_trim_budget": q_conv_trim_budget,
-    "events_ntile": q_events_ntile,
-    "events_histogram_quantile": q_events_histogram_quantile,
-    "events_psi_drift": q_events_psi_drift,
-    "events_changes_only": q_events_changes_only,
-    "events_zorder_key": q_events_zorder_key,
-    "doc_source_overlap": q_doc_source_overlap,
-    "events_basket_lift": q_events_basket_lift,
-    "events_percent_rank": q_events_percent_rank,
-    "events_rle": q_events_rle,
-    "tpch_q3": q_tpch_q3,
-    "events_kmv_rolling": q_events_kmv_rolling,
-    "events_k_anonymity": q_events_k_anonymity,
-    "events_coverage_gaps": q_events_coverage_gaps,
-    "events_cohen_kappa": q_events_cohen_kappa,
-    "orders_fk_orphans": q_orders_fk_orphans,
-    "events_seasonality": q_events_seasonality,
-    "doc_bm25": q_doc_bm25,
-    "doc_negative_samples": q_doc_negative_samples,
-    "ann_recall_eval": q_ann_recall_eval,
-    "doc_surprisal": q_doc_surprisal,
-    "doc_oov_rate": q_doc_oov_rate,
-    "doc_lang_confusion": q_doc_lang_confusion,
-    "events_error_context": q_events_error_context,
-    "events_theil_sen": q_events_theil_sen,
-    "events_state_dwell": q_events_state_dwell,
-    "doc_ctfidf": q_doc_ctfidf,
-    "events_identity_stitch": q_events_identity_stitch,
-    "events_value_time_corr": q_events_value_time_corr,
-    "events_minmax_scale": q_events_minmax_scale,
-    "events_hill_tail": q_events_hill_tail,
-    "events_ab_ztest": q_events_ab_ztest,
-    "events_mutual_info": q_events_mutual_info,
-    "events_gini": q_events_gini,
-    "doc_rrf_fusion": q_doc_rrf_fusion,
-    "events_wilson_ci": q_events_wilson_ci,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "emb_lsh_buckets": q_emb_lsh_buckets,
-    "emb_hyperplane_buckets": q_emb_hyperplane_buckets,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "emb_cosine_neardup": q_emb_cosine_neardup,
-    "multimodal_decode": q_multimodal_decode,
-}
-
-
-def _oracles() -> dict[str, str]:
-    return {
-        "pipeline_route_agg": _PIPELINE_ROUTE_AGG_DUCK,
-        "route_fanout_counts": _ROUTE_FANOUT_DUCK,
-        "interval_agg": _INTERVAL_AGG_DUCK,
-        "cumulative_to_delta": _CUM_TO_DELTA_DUCK,
-        "delta_to_cumulative": _DELTA_TO_CUM_DUCK,
-        "delta_to_rate": _DELTA_TO_RATE_DUCK,
-        "metric_start_time": _START_TIME_DUCK,
-        "interval_last": _INTERVAL_LAST_DUCK,
-        "log_dedup": _LOG_DEDUP_DUCK,
-        "probabilistic_sample": _PROB_SAMPLE_DUCK,
-        "tail_sample": _TAIL_SAMPLE_DUCK,
-        "group_by_conv": _GROUP_BY_CONV_DUCK,
-        "summary_split": _SUMMARY_SPLIT_DUCK,
-        "enrich_lookup": _ENRICH_DUCK,
-        "tpch_q1": _TPCH_Q1_SQL,
-        "join_chain": _JOIN_CHAIN_DUCK,
-        "template_mining": _template_mining_duck(),
-        "sumo_marshal": _SUMO_DUCK,
-        "partition_keys": _PARTITION_KEY_DUCK,
-        "unroll_tokens": _UNROLL_DUCK,
-        "otlp_roundtrip": _OTLP_ROUNDTRIP_DUCK,
-        "otlp_proto_marshal": _otlp_proto_duck(),
-        "genai_normalize": _genai_duck(),
-        "latency_histogram": _HISTOGRAM_DUCK,
-        "red_metrics": _RED_DUCK,
-        "agg_type_override": _AGG_OVERRIDE_DUCK,
-        "exceptions_rollup": _EXCEPTIONS_DUCK,
-        "round_robin": _ROUND_ROBIN_DUCK,
-        "doc_token_count": _TOKEN_COUNT_DUCK,
-        "doc_quality": _QUALITY_DUCK,
-        "doc_lang_id": _lang_duck(),
-        "doc_exact_dedup": _EXACT_DEDUP_DUCK,
-        "doc_ngram_jaccard": _JACCARD_DUCK,
-        "doc_minhash_lsh": _MINHASH_DUCK,
-        "doc_simhash": _SIMHASH_DUCK,
-        "doc_simhash_candidates": _SIMHASH_CAND_DUCK,
-        "doc_decontaminate": _DECONTAMINATE_DUCK,
-        "events_asof_join": _ASOF_DUCK,
-        "doc_quota_sample": _QUOTA_SAMPLE_DUCK,
-        "doc_vocab": _VOCAB_DUCK,
-        "doc_repetition": _REPETITION_DUCK,
-        "events_sessionize": _SESSIONIZE_DUCK,
-        "events_anomaly": _ANOMALY_DUCK,
-        "doc_chunk": _CHUNK_DUCK,
-        "doc_neardup_dedup": _NEARDUP_DEDUP_DUCK,
-        "doc_normalize": _NORMALIZE_DUCK,
-        "doc_pmi": _PMI_DUCK,
-        "events_rate_limit": _RATE_LIMIT_DUCK,
-        "events_heavy_hitters": _HEAVY_HITTERS_DUCK,
-        "events_session_stats": _SESSION_STATS_DUCK,
-        "events_retention": _RETENTION_DUCK,
-        "doc_split_assign": _SPLIT_ASSIGN_DUCK,
-        "doc_pack_sequences": _PACK_DUCK,
-        "doc_tfidf_topk": _TFIDF_DUCK,
-        "events_percentiles": _PERCENTILES_DUCK,
-        "events_range_join": _RANGE_JOIN_DUCK,
-        "events_funnel": _FUNNEL_DUCK,
-        "events_transitions": _TRANSITIONS_DUCK,
-        "part_edit_distance": _EDIT_DISTANCE_DUCK,
-        "events_sliding_window": _SLIDING_WINDOW_DUCK,
-        "events_new_users": _NEW_USERS_DUCK,
-        "events_pivot": _PIVOT_DUCK,
-        "doc_entropy": _ENTROPY_DUCK,
-        "events_json_attrs": _JSON_ATTRS_DUCK,
-        "events_interarrival": _INTERARRIVAL_DUCK,
-        "doc_weighted_sample": _WEIGHTED_SAMPLE_DUCK,
-        "events_alerts": _ALERTS_DUCK,
-        "events_decimate": _DECIMATE_DUCK,
-        "events_paths": _PATHS_DUCK,
-        "doc_remove_boilerplate": _BOILERPLATE_DUCK,
-        "transcripts_integrity": _TRANSCRIPT_INTEGRITY_DUCK,
-        "events_winsorize": _WINSORIZE_DUCK,
-        "events_scd2_enrich": _SCD2_DUCK,
-        "events_kmv_distinct": _KMV_DUCK,
-        "doc_prefix_jaccard": _PREFIX_JACCARD_DUCK,
-        "events_span_union": _SPAN_UNION_DUCK,
-        "events_locf_resample": _LOCF_DUCK,
-        "events_cms_counts": _CMS_DUCK,
-        "events_twa": _TWA_DUCK,
-        "doc_mixture": _MIXTURE_DUCK,
-        "events_mad_outliers": _MAD_DUCK,
-        "events_exp_histogram": _EXP_HIST_DUCK,
-        "events_rollup": _ROLLUP_DUCK,
-        "events_bloom_prefilter": _BLOOM_DUCK,
-        "events_skew_report": _SKEW_DUCK,
-        "events_table_diff": _TABLE_DIFF_DUCK,
-        "events_reply_latency": _REPLY_LATENCY_DUCK,
-        "conv_trim_budget": _TRIM_BUDGET_DUCK,
-        "events_ntile": _NTILE_DUCK,
-        "events_histogram_quantile": _HIST_QUANTILE_DUCK,
-        "events_psi_drift": _PSI_DUCK,
-        "events_changes_only": _CHANGES_ONLY_DUCK,
-        "events_zorder_key": _ZORDER_DUCK,
-        "doc_source_overlap": _SOURCE_OVERLAP_DUCK,
-        "events_basket_lift": _BASKET_LIFT_DUCK,
-        "events_percent_rank": _PERCENT_RANK_DUCK,
-        "events_rle": _RLE_DUCK,
-        "tpch_q3": _TPCH_Q3_DUCK,
-        "events_kmv_rolling": _KMV_ROLLING_DUCK,
-        "events_k_anonymity": _K_ANON_DUCK,
-        "events_coverage_gaps": _COVERAGE_GAPS_DUCK,
-        "events_cohen_kappa": _KAPPA_DUCK,
-        "orders_fk_orphans": _FK_ORPHANS_DUCK,
-        "events_seasonality": _SEASONALITY_DUCK,
-        "doc_bm25": _BM25_DUCK,
-        "doc_negative_samples": _NEG_SAMPLES_DUCK,
-        "ann_recall_eval": _ANN_RECALL_DUCK,
-        "doc_surprisal": _SURPRISAL_DUCK,
-        "doc_oov_rate": _OOV_DUCK,
-        "doc_lang_confusion": _LANG_CONFUSION_DUCK,
-        "events_error_context": _ERROR_CONTEXT_DUCK,
-        "events_theil_sen": _THEIL_SEN_DUCK,
-        "events_state_dwell": _STATE_DWELL_DUCK,
-        "doc_ctfidf": _CTFIDF_DUCK,
-        "events_identity_stitch": _IDENTITY_STITCH_DUCK,
-        "events_value_time_corr": _PEARSON_DUCK,
-        "events_minmax_scale": _MINMAX_DUCK,
-        "events_hill_tail": _HILL_DUCK,
-        "events_ab_ztest": _ZTEST_DUCK,
-        "events_mutual_info": _MI_DUCK,
-        "events_gini": _GINI_DUCK,
-        "doc_rrf_fusion": _RRF_DUCK,
-        "events_wilson_ci": _WILSON_DUCK,
-        "ann_cosine_topk": _ANN_DUCK,
-        "emb_lsh_buckets": _EMB_BUCKET_DUCK,
-        "emb_hyperplane_buckets": _HYPERPLANE_BUCKETS_DUCK,
-        "ann_lsh_topk": _ANN_LSH_DUCK,
-        "ann_ivf_topk": _ivf_duck(),
-        "emb_cosine_neardup": _EMB_NEARDUP_DUCK,
-        "multimodal_decode": _MULTIMODAL_DUCK,
-        "lib_pipeline_e2e": _lib_pipeline_duck(),
-        "lib_marshal_sink": _marshal_sink_duck(),
-        "lib_template_clusters": _lib_clusters_duck(),
-        "lib_streaming_pipeline": _lib_streaming_duck(),
-        "lib_stateful_intervals": _lib_stateful_duck(),
-        "lib_streaming_dedup": "SELECT event_id, user_id FROM events",
-        # session_window merges touching windows: only a gap STRICTLY
-        # greater than the gap parameter splits (same rule as batch
-        # sessionize) — pinned by test_streaming_sessions_gap_boundary
-        # stream-stream interval join: emitted inner matches over a fully
-        # replayed source equal the batch range join, stated naively
-        "lib_stream_stream_join": """
-SELECT c.event_id, c.user_id, v.event_id AS view_event_id
-FROM events c JOIN events v
-  ON c.user_id = v.user_id
- AND c.event_type = 'click' AND v.event_type = 'view'
- AND epoch_us(v.ts) >= epoch_us(c.ts) - 600000000
- AND epoch_us(v.ts) <= epoch_us(c.ts) + 600000000
-""",
-        # the stateful streaming throttle replays time-split
-        # microbatches, so its admitted set equals the BATCH rate_limit
-        # — stated as the plain row_number cut over (user, day)
-        "lib_streaming_rate_limit": """
-WITH r AS (SELECT event_id, user_id,
-             row_number() OVER (
-               PARTITION BY user_id, (epoch_us(ts) // 1000000 // 86400)
-               ORDER BY ts, event_id) AS rn
-           FROM events)
-SELECT event_id, user_id FROM r WHERE rn <= 2
-""",
-        # the stateful streaming gauge compression replays time-split
-        # microbatches, so its emitted set equals the BATCH changes_only
-        # — stated here as the plain lag / IS DISTINCT FROM query
-        "lib_streaming_changes": """
-WITH s AS (SELECT event_id, user_id, CAST(floor(value) AS BIGINT) AS v,
-             lag(CAST(floor(value) AS BIGINT)) OVER w AS prev,
-             row_number() OVER w AS rn
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-SELECT event_id, user_id, v AS value_floor
-FROM s WHERE rn = 1 OR v IS DISTINCT FROM prev
-""",
-        "lib_streaming_sessions": """
-WITH o AS (
-  SELECT user_id, ts, event_id,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS prev_us,
-         epoch_us(ts) AS cur_us
-  FROM events),
-f AS (SELECT user_id, ts, event_id,
-        CASE WHEN prev_us IS NULL OR cur_us - prev_us > 28800000000
-             THEN 1 ELSE 0 END AS ns
-      FROM o),
-s AS (SELECT user_id, ts,
-        SUM(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS UNBOUNDED PRECEDING) AS sid
-      FROM f)
-SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
-FROM s GROUP BY user_id, sid
-""",
-    }
-
-
 # ---------------------------------------------------------------------------
 # Library-backed queries — ALL fully oracle-backed now: the committed
 # parquet fixtures let DuckDB reproduce the per-sink counts (batch AND
 # streaming — the checkpoint/trigger machinery is not SQL, but its routed
 # output is) and the cluster components (unrolled label propagation).
 # ---------------------------------------------------------------------------
+
+_SCRATCH_ROOT: list[str] = []  # this process's root, made on first use
+
+
+def _scratch(prefix: str) -> str:
+    """A new empty directory for one library entry's warehouse, stream
+    source, sink or checkpoint. All of them sit under one per-process
+    root that is made on first use and removed when the process exits —
+    not sooner: entries return lazy reads over these files."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="entry_"))
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT[0], ignore_errors=True)
+    root = _SCRATCH_ROOT[0]
+    path = os.path.join(root, f"{prefix}{len(os.listdir(root))}")
+    os.mkdir(path)
+    return path
 
 
 def _lib_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4663,13 +4383,11 @@ def _lib_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape). Reading the fixture file (instead of Spark-side datagen) lets
     the DuckDB oracle read the identical bytes — the per-sink counts are
     fully SQL-checkable (round-2 VERDICT item 3)."""
-    import tempfile
-
     from cardinalhq_otel_collector_spark.plans.pipeline import AGG_TABLE, run_pipeline
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
 
-    catalog = Catalog(spark, tempfile.mkdtemp(prefix="entry_wh_"))
+    catalog = Catalog(spark, _scratch("wh_"))
     df = spark.read.parquet(TRANSCRIPTS_FIXTURE)
     run_pipeline(spark, df, catalog, run_id="entry")
     return (
@@ -4686,15 +4404,13 @@ def _lib_marshal_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are read BACK from disk — the oracle reproduces the exact lines
     (routed CTE + sumo rendering) in DuckDB, so the byte shape is checked
     after the full write/read trip, not just in-plan."""
-    import tempfile
-
     from cardinalhq_otel_collector_spark.config import PipelineConfig
     from cardinalhq_otel_collector_spark.datagen import routing_rules
     from cardinalhq_otel_collector_spark.plans.pipeline import run_pipeline
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
 
-    catalog = Catalog(spark, tempfile.mkdtemp(prefix="entry_marshal_wh_"))
+    catalog = Catalog(spark, _scratch("marshal_wh_"))
     cfg = PipelineConfig(
         rules=routing_rules(), marshal_sinks={"errors": "sumo_ic"}
     )
@@ -4735,17 +4451,15 @@ def _lib_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean). The checkpoint/trigger machinery is not SQL, but its OUTPUT
     is: per-sink routed counts must equal the batch route — the oracle is
     the same route-CASE + COUNT the batch pipeline oracle uses."""
+    import os
     import shutil
-    import tempfile
 
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
     from cardinalhq_otel_collector_spark.streaming.stream_pipeline import (
         run_streaming_pipeline,
     )
 
-    import os
-
-    base = tempfile.mkdtemp(prefix="entry_stream_")
+    base = _scratch("stream_")
     src, out = f"{base}/src", f"{base}/out"
     os.makedirs(src)
     shutil.copy(TRANSCRIPTS_FIXTURE, os.path.join(src, "transcripts.parquet"))
@@ -4761,9 +4475,7 @@ def _drain(stream_df: DataFrame) -> DataFrame:
     """Run a bounded stream to completion into a fresh parquet sink (own
     checkpoint, ``availableNow`` trigger, append mode) and read back what
     it emitted."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="entry_sink_")
+    base = _scratch("sink_")
     (
         stream_df.writeStream.format("parquet")
         .option("path", f"{base}/out")
@@ -4791,10 +4503,9 @@ def _replay(
     raises is in force for the frames after it."""
     import os
     import shutil
-    import tempfile
     import time
 
-    base = tempfile.mkdtemp(prefix="entry_replay_")
+    base = _scratch("replay_")
     src = f"{base}/src"
     os.makedirs(src)
     now = time.time()
@@ -4942,13 +4653,11 @@ def _lib_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow. Inner-join emission is match-driven, so with
     watermarks longer than the replayed span the emitted set equals
     the batch range join — which the DuckDB oracle states naively."""
-    import tempfile
-
     from cardinalhq_otel_collector_spark.streaming.stream_pipeline import (
         stream_stream_interval_join,
     )
 
-    base = tempfile.mkdtemp(prefix="entry_ssj_")
+    base = _scratch("ssj_")
     ev = _read(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -5025,18 +4734,153 @@ def _lib_streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return admitted.select("event_id", "user_id")
 
 
-_LIB_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "lib_pipeline_e2e": _lib_pipeline,
-    "lib_marshal_sink": _lib_marshal_sink,
-    "lib_template_clusters": _lib_template_clusters,
-    "lib_streaming_pipeline": _lib_streaming,
-    "lib_stateful_intervals": _lib_stateful,
-    "lib_streaming_dedup": _lib_streaming_dedup,
-    "lib_streaming_sessions": _lib_streaming_sessions,
-    "lib_stream_stream_join": _lib_stream_join,
-    "lib_streaming_changes": _lib_streaming_changes,
-    "lib_streaming_rate_limit": _lib_streaming_rate_limit,
-}
+def _board() -> tuple[tuple[str, _Query, str], ...]:
+    """Every board entry once, in driver order (the driver checks the
+    first 50): its name, its Spark builder over the library operators and
+    its DuckDB oracle. Built per call, not at import, so that importing
+    this module imports nothing from the package."""
+    return (
+        ("pipeline_route_agg", q_pipeline_route_agg, _PIPELINE_ROUTE_AGG_DUCK),
+        ("route_fanout_counts", q_route_fanout_counts, _ROUTE_FANOUT_DUCK),
+        ("interval_agg", q_interval_agg, _INTERVAL_AGG_DUCK),
+        ("cumulative_to_delta", q_cumulative_to_delta, _CUM_TO_DELTA_DUCK),
+        ("delta_to_cumulative", q_delta_to_cumulative, _DELTA_TO_CUM_DUCK),
+        ("delta_to_rate", q_delta_to_rate, _DELTA_TO_RATE_DUCK),
+        ("metric_start_time", q_metric_start_time, _START_TIME_DUCK),
+        ("interval_last", q_interval_last, _INTERVAL_LAST_DUCK),
+        ("log_dedup", q_log_dedup, _LOG_DEDUP_DUCK),
+        ("probabilistic_sample", q_probabilistic_sample, _PROB_SAMPLE_DUCK),
+        ("tail_sample", q_tail_sample, _TAIL_SAMPLE_DUCK),
+        ("group_by_conv", q_group_by_conv, _GROUP_BY_CONV_DUCK),
+        ("summary_split", q_summary_split, _SUMMARY_SPLIT_DUCK),
+        ("enrich_lookup", q_enrich_lookup, _ENRICH_DUCK),
+        ("tpch_q1", q_tpch_q1, _TPCH_Q1_SQL),
+        ("join_chain", q_join_chain, _JOIN_CHAIN_DUCK),
+        ("template_mining", q_template_mining, _template_mining_duck()),
+        ("sumo_marshal", q_sumo_marshal, _SUMO_DUCK),
+        ("partition_keys", q_partition_keys, _PARTITION_KEY_DUCK),
+        ("unroll_tokens", q_unroll_tokens, _UNROLL_DUCK),
+        ("otlp_roundtrip", q_otlp_roundtrip, _OTLP_ROUNDTRIP_DUCK),
+        ("otlp_proto_marshal", q_otlp_proto_marshal, _otlp_proto_duck()),
+        ("genai_normalize", q_genai_normalize, _genai_duck()),
+        ("latency_histogram", q_latency_histogram, _HISTOGRAM_DUCK),
+        ("red_metrics", q_red_metrics, _RED_DUCK),
+        ("agg_type_override", q_agg_type_override, _AGG_OVERRIDE_DUCK),
+        ("exceptions_rollup", q_exceptions_rollup, _EXCEPTIONS_DUCK),
+        ("round_robin", q_round_robin, _ROUND_ROBIN_DUCK),
+        ("doc_token_count", q_doc_token_count, _TOKEN_COUNT_DUCK),
+        ("doc_quality", q_doc_quality, _QUALITY_DUCK),
+        ("doc_lang_id", q_doc_lang_id, _lang_duck()),
+        ("doc_exact_dedup", q_doc_exact_dedup, _EXACT_DEDUP_DUCK),
+        ("doc_ngram_jaccard", q_doc_ngram_jaccard, _JACCARD_DUCK),
+        ("doc_minhash_lsh", q_doc_minhash_lsh, _MINHASH_DUCK),
+        ("doc_simhash", q_doc_simhash, _SIMHASH_DUCK),
+        ("doc_simhash_candidates", q_doc_simhash_candidates, _SIMHASH_CAND_DUCK),
+        ("doc_decontaminate", q_doc_decontaminate, _DECONTAMINATE_DUCK),
+        ("events_asof_join", q_events_asof_join, _ASOF_DUCK),
+        ("doc_quota_sample", q_doc_quota_sample, _QUOTA_SAMPLE_DUCK),
+        ("doc_vocab", q_doc_vocab, _VOCAB_DUCK),
+        ("doc_repetition", q_doc_repetition, _REPETITION_DUCK),
+        ("events_sessionize", q_events_sessionize, _SESSIONIZE_DUCK),
+        ("events_anomaly", q_events_anomaly, _ANOMALY_DUCK),
+        ("doc_chunk", q_doc_chunk, _CHUNK_DUCK),
+        ("doc_neardup_dedup", q_doc_neardup_dedup, _NEARDUP_DEDUP_DUCK),
+        ("doc_normalize", q_doc_normalize, _NORMALIZE_DUCK),
+        ("doc_pmi", q_doc_pmi, _PMI_DUCK),
+        ("events_rate_limit", q_events_rate_limit, _RATE_LIMIT_DUCK),
+        ("events_heavy_hitters", q_events_heavy_hitters, _HEAVY_HITTERS_DUCK),
+        ("events_session_stats", q_events_session_stats, _SESSION_STATS_DUCK),
+        ("events_retention", q_events_retention, _RETENTION_DUCK),
+        ("doc_split_assign", q_doc_split_assign, _SPLIT_ASSIGN_DUCK),
+        ("doc_pack_sequences", q_doc_pack_sequences, _PACK_DUCK),
+        ("doc_tfidf_topk", q_doc_tfidf_topk, _TFIDF_DUCK),
+        ("events_percentiles", q_events_percentiles, _PERCENTILES_DUCK),
+        ("events_range_join", q_events_range_join, _RANGE_JOIN_DUCK),
+        ("events_funnel", q_events_funnel, _FUNNEL_DUCK),
+        ("events_transitions", q_events_transitions, _TRANSITIONS_DUCK),
+        ("part_edit_distance", q_part_edit_distance, _EDIT_DISTANCE_DUCK),
+        ("events_sliding_window", q_events_sliding_window, _SLIDING_WINDOW_DUCK),
+        ("events_new_users", q_events_new_users, _NEW_USERS_DUCK),
+        ("events_pivot", q_events_pivot, _PIVOT_DUCK),
+        ("doc_entropy", q_doc_entropy, _ENTROPY_DUCK),
+        ("events_json_attrs", q_events_json_attrs, _JSON_ATTRS_DUCK),
+        ("events_interarrival", q_events_interarrival, _INTERARRIVAL_DUCK),
+        ("doc_weighted_sample", q_doc_weighted_sample, _WEIGHTED_SAMPLE_DUCK),
+        ("events_alerts", q_events_alerts, _ALERTS_DUCK),
+        ("events_decimate", q_events_decimate, _DECIMATE_DUCK),
+        ("events_paths", q_events_paths, _PATHS_DUCK),
+        ("doc_remove_boilerplate", q_doc_remove_boilerplate, _BOILERPLATE_DUCK),
+        ("transcripts_integrity", q_transcripts_integrity, _TRANSCRIPT_INTEGRITY_DUCK),
+        ("events_winsorize", q_events_winsorize, _WINSORIZE_DUCK),
+        ("events_scd2_enrich", q_events_scd2_enrich, _SCD2_DUCK),
+        ("events_kmv_distinct", q_events_kmv_distinct, _KMV_DUCK),
+        ("doc_prefix_jaccard", q_doc_prefix_jaccard, _PREFIX_JACCARD_DUCK),
+        ("events_span_union", q_events_span_union, _SPAN_UNION_DUCK),
+        ("events_locf_resample", q_events_locf_resample, _LOCF_DUCK),
+        ("events_cms_counts", q_events_cms_counts, _CMS_DUCK),
+        ("events_twa", q_events_twa, _TWA_DUCK),
+        ("doc_mixture", q_doc_mixture, _MIXTURE_DUCK),
+        ("events_mad_outliers", q_events_mad_outliers, _MAD_DUCK),
+        ("events_exp_histogram", q_events_exp_histogram, _EXP_HIST_DUCK),
+        ("events_rollup", q_events_rollup, _ROLLUP_DUCK),
+        ("events_bloom_prefilter", q_events_bloom_prefilter, _BLOOM_DUCK),
+        ("events_skew_report", q_events_skew_report, _SKEW_DUCK),
+        ("events_table_diff", q_events_table_diff, _TABLE_DIFF_DUCK),
+        ("events_reply_latency", q_events_reply_latency, _REPLY_LATENCY_DUCK),
+        ("conv_trim_budget", q_conv_trim_budget, _TRIM_BUDGET_DUCK),
+        ("events_ntile", q_events_ntile, _NTILE_DUCK),
+        ("events_histogram_quantile", q_events_histogram_quantile, _HIST_QUANTILE_DUCK),
+        ("events_psi_drift", q_events_psi_drift, _PSI_DUCK),
+        ("events_changes_only", q_events_changes_only, _CHANGES_ONLY_DUCK),
+        ("events_zorder_key", q_events_zorder_key, _ZORDER_DUCK),
+        ("doc_source_overlap", q_doc_source_overlap, _SOURCE_OVERLAP_DUCK),
+        ("events_basket_lift", q_events_basket_lift, _BASKET_LIFT_DUCK),
+        ("events_percent_rank", q_events_percent_rank, _PERCENT_RANK_DUCK),
+        ("events_rle", q_events_rle, _RLE_DUCK),
+        ("tpch_q3", q_tpch_q3, _TPCH_Q3_DUCK),
+        ("events_kmv_rolling", q_events_kmv_rolling, _KMV_ROLLING_DUCK),
+        ("events_k_anonymity", q_events_k_anonymity, _K_ANON_DUCK),
+        ("events_coverage_gaps", q_events_coverage_gaps, _COVERAGE_GAPS_DUCK),
+        ("events_cohen_kappa", q_events_cohen_kappa, _KAPPA_DUCK),
+        ("orders_fk_orphans", q_orders_fk_orphans, _FK_ORPHANS_DUCK),
+        ("events_seasonality", q_events_seasonality, _SEASONALITY_DUCK),
+        ("doc_bm25", q_doc_bm25, _BM25_DUCK),
+        ("doc_negative_samples", q_doc_negative_samples, _NEG_SAMPLES_DUCK),
+        ("ann_recall_eval", q_ann_recall_eval, _ANN_RECALL_DUCK),
+        ("doc_surprisal", q_doc_surprisal, _SURPRISAL_DUCK),
+        ("doc_oov_rate", q_doc_oov_rate, _OOV_DUCK),
+        ("doc_lang_confusion", q_doc_lang_confusion, _LANG_CONFUSION_DUCK),
+        ("events_error_context", q_events_error_context, _ERROR_CONTEXT_DUCK),
+        ("events_theil_sen", q_events_theil_sen, _THEIL_SEN_DUCK),
+        ("events_state_dwell", q_events_state_dwell, _STATE_DWELL_DUCK),
+        ("doc_ctfidf", q_doc_ctfidf, _CTFIDF_DUCK),
+        ("events_identity_stitch", q_events_identity_stitch, _IDENTITY_STITCH_DUCK),
+        ("events_value_time_corr", q_events_value_time_corr, _PEARSON_DUCK),
+        ("events_minmax_scale", q_events_minmax_scale, _MINMAX_DUCK),
+        ("events_hill_tail", q_events_hill_tail, _HILL_DUCK),
+        ("events_ab_ztest", q_events_ab_ztest, _ZTEST_DUCK),
+        ("events_mutual_info", q_events_mutual_info, _MI_DUCK),
+        ("events_gini", q_events_gini, _GINI_DUCK),
+        ("doc_rrf_fusion", q_doc_rrf_fusion, _RRF_DUCK),
+        ("events_wilson_ci", q_events_wilson_ci, _WILSON_DUCK),
+        ("ann_cosine_topk", q_ann_cosine_topk, _ANN_DUCK),
+        ("emb_lsh_buckets", q_emb_lsh_buckets, _EMB_BUCKET_DUCK),
+        ("emb_hyperplane_buckets", q_emb_hyperplane_buckets, _HYPERPLANE_BUCKETS_DUCK),
+        ("ann_lsh_topk", q_ann_lsh_topk, _ANN_LSH_DUCK),
+        ("ann_ivf_topk", q_ann_ivf_topk, _ivf_duck()),
+        ("emb_cosine_neardup", q_emb_cosine_neardup, _EMB_NEARDUP_DUCK),
+        ("multimodal_decode", q_multimodal_decode, _MULTIMODAL_DUCK),
+        ("lib_pipeline_e2e", _lib_pipeline, _lib_pipeline_duck()),
+        ("lib_marshal_sink", _lib_marshal_sink, _marshal_sink_duck()),
+        ("lib_template_clusters", _lib_template_clusters, _lib_clusters_duck()),
+        ("lib_streaming_pipeline", _lib_streaming, _lib_streaming_duck()),
+        ("lib_stateful_intervals", _lib_stateful, _lib_stateful_duck()),
+        ("lib_streaming_dedup", _lib_streaming_dedup, _STREAM_DEDUP_DUCK),
+        ("lib_streaming_sessions", _lib_streaming_sessions, _STREAM_SESSIONS_DUCK),
+        ("lib_stream_stream_join", _lib_stream_join, _STREAM_JOIN_DUCK),
+        ("lib_streaming_changes", _lib_streaming_changes, _STREAM_CHANGES_DUCK),
+        ("lib_streaming_rate_limit", _lib_streaming_rate_limit, _STREAM_RATE_LIMIT_DUCK),
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -5072,11 +4916,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return interval_aggregate(decorated, keys=["sink", "role"], interval="1 hour")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = dict(_QUERIES)
-    out.update(_LIB_QUERIES)
-    return out
+def queries() -> dict[str, _Query]:
+    return {name: build for name, build, _ in _board()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return _oracles()
+    return {name: sql for name, _, sql in _board()}

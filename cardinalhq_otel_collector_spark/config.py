@@ -71,10 +71,6 @@ class PipelineConfig:
     # = stage skipped; sinks that consume parquet directly need no marshal.
     marshal_sinks: dict[str, str] = field(default_factory=dict)
 
-    @property
-    def agg_interval_seconds(self) -> int:
-        return parse_duration_seconds(self.agg_interval)
-
     def validate(self) -> "PipelineConfig":
         # aggregationprocessor/config.go:42-44: interval must be ≥ 1s —
         # parse the actual string the pipeline hands to F.window, so an

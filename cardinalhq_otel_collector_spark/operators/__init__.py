@@ -1,8 +1,9 @@
 """Operator library — one module per operator family of SURVEY.md §2.
 
 Every operator is a pure ``DataFrame -> DataFrame`` function built from
-native ``pyspark.sql.functions`` expressions (whole-stage codegen); the
-only pandas-UDF paths are the ones the built-ins genuinely can't express
-(minhash signatures over *distinct* templates, multimodal decode stubs),
-and those run Arrow-vectorized, never per-row.
+native ``pyspark.sql.functions`` expressions (whole-stage codegen). The
+only pandas paths are the ones the built-ins genuinely can't express —
+the ``otlp_proto_logs`` wire encoder (a pandas UDF), the multimodal
+decode stubs (``mapInPandas``) and, in ``streaming/stateful_agg``, the
+two ``applyInPandasWithState`` operators — and those run Arrow-batched.
 """

@@ -122,18 +122,14 @@ def marshal_routed(df: DataFrame, fmt: str, sink: str) -> DataFrame:
             message_attrs={"conv_id": F.col("conv_id")},
             out_col="value",
         )
-    elif fmt == "otlp_json":
-        out = M.otlp_json_logs(
+    elif fmt in ("otlp_json", "otlp_proto"):
+        # one plog record either way (marshaler.go:42-71): the two OTLP
+        # encodings carry the same resource and record attributes
+        encode = M.otlp_json_logs if fmt == "otlp_json" else M.otlp_proto_logs
+        out = encode(
             df, body=body, ts=F.col("ts"),
             resource_attrs={"service": host},
             attrs={"tool": F.col("tool"), "level": F.col("parsed_level")},
-            out_col="value",
-        )
-    elif fmt == "otlp_proto":
-        out = M.otlp_proto_logs(
-            df, body=body, ts=F.col("ts"),
-            resource_attrs={"service": host},
-            attrs={"tool": F.col("tool")},
             out_col="value",
         )
     else:

@@ -66,12 +66,12 @@ def run_streaming_pipeline(
     out_dir: str,
     config: PipelineConfig | None = None,
     watermark: str = "10 minutes",
-    available_now: bool = True,
 ) -> list:
-    """Start (and with available_now=True, run to completion) the streaming
-    pipeline: decorated/routed append sink + windowed aggregate sink.
+    """Run the streaming pipeline to completion over what ``source_dir``
+    holds (``availableNow`` trigger): decorated/routed append sink +
+    windowed aggregate sink.
 
-    Returns the list of streaming queries (terminated if available_now).
+    Returns the list of (terminated) streaming queries.
     Restart-safety: both sinks are file sinks with checkpoints — a killed
     and restarted job resumes from the checkpoint and never duplicates a
     committed file (exactly-once within one sink directory).
@@ -88,14 +88,13 @@ def run_streaming_pipeline(
     routed = add_time_partitions(
         slim_facts(decorated), granularity=config.partition_granularity
     )
-    trigger = {"availableNow": True} if available_now else {"processingTime": "10 seconds"}
     q_routed = (
         routed.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "routed_stream"))
         .option("checkpointLocation", os.path.join(out_dir, "_chk_routed"))
         .partitionBy(*routed_partition_cols(config.partition_granularity))
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(availableNow=True)
         .start()
     )
 
@@ -110,14 +109,13 @@ def run_streaming_pipeline(
         .option("path", os.path.join(out_dir, "agg_stream"))
         .option("checkpointLocation", os.path.join(out_dir, "_chk_aggs"))
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(availableNow=True)
         .start()
     )
 
     queries = [q_routed, q_aggs]
-    if available_now:
-        for q in queries:
-            q.awaitTermination()
+    for q in queries:
+        q.awaitTermination()
     return queries
 
 

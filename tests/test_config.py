@@ -1,6 +1,6 @@
 import pytest
 
-from cardinalhq_otel_collector_spark.config import PipelineConfig
+from cardinalhq_otel_collector_spark.config import PipelineConfig, parse_duration_seconds
 
 
 def _rules():
@@ -25,7 +25,8 @@ def test_interval_string_is_validated():
         PipelineConfig(rules=_rules(), agg_interval="one hour").validate()
     with pytest.raises(ValueError, match="bad interval"):
         PipelineConfig(rules=_rules(), agg_interval="5 fortnights").validate()
-    assert PipelineConfig(rules=_rules(), agg_interval="90 seconds").validate().agg_interval_seconds == 90
+    cfg = PipelineConfig(rules=_rules(), agg_interval="90 seconds").validate()
+    assert parse_duration_seconds(cfg.agg_interval) == 90
 
 
 def test_mask_must_not_match_any_pattern():

@@ -46,7 +46,7 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", sorted(entrymod._oracles()))
+@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
 def test_query_matches_oracle(spark, duck, name):
     q = entrymod.queries()[name]
     sdf = q(spark, SF_DIR)
@@ -66,10 +66,10 @@ def test_query_matches_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
-@pytest.mark.parametrize("name", list(entrymod._LIB_QUERIES))
+@pytest.mark.parametrize("name", [k for k in entrymod.queries() if k.startswith("lib_")])
 def test_lib_query_smoke(spark, name):
     """Rows-only gate for the non-SQL-expressible library queries."""
-    df = entrymod._LIB_QUERIES[name](spark, SF_DIR)
+    df = entrymod.queries()[name](spark, SF_DIR)
     assert df.count() > 0
 
 

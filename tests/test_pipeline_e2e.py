@@ -220,7 +220,7 @@ def test_rerun_same_run_id_is_noop(spark, transcripts_df, warehouse):
     assert before == after
 
 
-def test_hour_partition_agg_fast_path_matches_window_agg(spark, tmp_path):
+def test_hour_layout_aggregate_equals_window_agg(spark, tmp_path):
     """S7 under the hour layout with a 1-hour agg interval: the per-sink
     aggregate equals window(ts, '1 hour') over the written routed table
     exactly — including across a midnight boundary (p_date changes under
@@ -310,9 +310,18 @@ def test_marshal_sink_stage_e2e(spark, transcripts_df, tmp_path):
     )
     from cardinalhq_otel_collector_spark.sources.catalog import Catalog
 
+    # datagen never gives a search-tool turn a logfmt line, so add three
+    # that carry a level: the otlp_proto sink must encode it too
+    ts0 = datetime(2026, 3, 1, 10, 0)
+    extra = spark.createDataFrame(
+        [("conv-otlp", i, "tool", f'level={lvl} code=200 latency_ms=5 service=s msg="m"',
+          "search", ts0) for i, lvl in enumerate(("INFO", "WARN", '"DEBUG"'))],
+        transcripts_df.schema,
+    )
+    df = transcripts_df.unionByName(extra)
     cfg = _marshal_config()
     catalog = Catalog(spark, str(tmp_path / "wh_marshal"))
-    summary = run_pipeline(spark, transcripts_df, catalog, config=cfg, run_id="m1")
+    summary = run_pipeline(spark, df, catalog, config=cfg, run_id="m1")
     assert "marshal_write" in summary["stages_run"]
 
     routed = catalog.read(ROUTED_TABLE)
@@ -337,26 +346,32 @@ def test_marshal_sink_stage_e2e(spark, transcripts_df, tmp_path):
     )
     assert got == want
 
-    # otlp_proto binary: decodes, body matches some routed search_tools row
+    # otlp_proto binary: every record decodes to the body and attributes
+    # of one routed search_tools row — the same attributes the otlp_json
+    # encoding carries, NULL values omitted as the encoder omits them
     proto = catalog.read("marshaled_search_tools")
     assert proto.count() == by_sink["search_tools"]
-    rec = parse_otlp_proto_logs(proto.first()["value"])
-    texts = {
-        r[0]
+    recs = [parse_otlp_proto_logs(r["value"]) for r in proto.collect()]
+    assert all(rec["ts_nanos"] > 0 for rec in recs)
+    got = Counter((rec["body"], tuple(sorted(rec["attrs"].items()))) for rec in recs)
+    want = Counter(
+        (r["body"], tuple((k, r[k]) for k in ("level", "tool") if r[k] is not None))
         for r in routed.where(F.col("sink") == "search_tools")
-        .select(F.coalesce("text_redacted", "text"))
+        .select(
+            F.coalesce("text_redacted", "text").alias("body"),
+            F.col("parsed_level").alias("level"),
+            "tool",
+        )
         .collect()
-    }
-    assert rec["body"] in texts and rec["ts_nanos"] > 0
+    )
+    assert got == want
 
     # resume: the stage is lineage-committed and skipped on rerun
-    summary2 = run_pipeline(
-        spark, transcripts_df, catalog, config=cfg, run_id="m1", resume=True
-    )
+    summary2 = run_pipeline(spark, df, catalog, config=cfg, run_id="m1", resume=True)
     assert "marshal_write" in summary2["stages_skipped"]
 
 
-def test_s7_fast_path_requires_hour_aligned_timezone(spark, tmp_path):
+def test_aggregate_buckets_are_epoch_aligned_under_half_hour_offset(spark, tmp_path):
     """p_date/p_hour follow the SESSION tz while S7's window(ts, '1 hour')
     is epoch-aligned: under a non-whole-hour-offset zone (Asia/Kolkata =
     +5:30 shifts every partition boundary by 30 min) the aggregate must
@@ -407,7 +422,7 @@ def test_s7_fast_path_requires_hour_aligned_timezone(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
-def test_s7_fast_path_drops_null_ts_like_window(spark, tmp_path):
+def test_aggregate_does_not_count_null_ts(spark, tmp_path):
     """NULL-ts rows land in __HIVE_DEFAULT_PARTITION__ on write and S7's
     window() drops them: a null-timestamp turn produces no aggregate
     group."""

@@ -9,14 +9,16 @@ actual executed plans (SURVEY.md §4):
     the MinHash/SimHash candidate bands are one projection (no union)
   * partitioned reads prune to one sink directory
 
-plus source gates on the streaming code: one replay harness in the
-entry module, and no pandas state machine that re-implements the
-native watermarked interval aggregate.
+plus source gates on the streaming code and the entry module: one
+replay harness, one board table, one scratch owner, and no pandas state
+machine that re-implements the native watermarked interval aggregate.
 """
 
 import ast
 import os
 import pathlib
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -145,6 +147,39 @@ def test_entry_stages_and_sinks_streams_in_one_place():
     assert sum(
         a.attr == "utime" and getattr(a.value, "id", "") == "os" for a in attrs
     ) == 1
+
+
+def test_entry_board_and_scratch_declared_in_one_place():
+    """Each board entry is declared once, in _board(): no dict literal in
+    the entry module maps more than 20 entry names (a second registry to
+    keep in sync). Entry scratch directories come from _scratch(), the
+    module's only mkdtemp call."""
+    import __spark_entry__ as entry
+
+    tree = ast.parse(pathlib.Path(entry.__file__).read_text())
+    calls = [n.func for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    assert sum(
+        getattr(f, "attr", None) == "mkdtemp" or getattr(f, "id", None) == "mkdtemp"
+        for f in calls
+    ) == 1
+    names = set(entry.queries())
+    for d in (n for n in ast.walk(tree) if isinstance(n, ast.Dict)):
+        keys = {k.value for k in d.keys if isinstance(k, ast.Constant)}
+        assert len(keys & names) <= 20, sorted(keys & names)[:5]
+
+
+def test_entry_scratch_is_removed_at_exit():
+    """A _scratch() directory lives until its process exits and not
+    after: board runs leave nothing behind in the temp dir."""
+    root = pathlib.Path(pkg.__file__).parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import os, __spark_entry__ as e; p = e._scratch('x'); print(p, os.path.isdir(p))"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out[1] == "True"
+    assert not os.path.exists(out[0])
+    assert not os.path.exists(os.path.dirname(out[0]))
 
 
 def test_no_pandas_state_machine_for_interval_buckets():
