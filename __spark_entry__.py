@@ -14,10 +14,13 @@ to DOUBLE at the end; orderings carry explicit integer tiebreakers.
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # a board entry's Spark side: (session, sf_dir) -> result frame
 _Query = Callable[[SparkSession, str], DataFrame]
@@ -39,8 +42,10 @@ def _parse_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
-_SCAN_EST_CACHE: dict[tuple[str, str], int] = {}
-_SCAN_SIZE_CACHE: dict[tuple[str, str], int] = {}
+# path -> (stamp, inferred schema) of every fixed parquet input the entries
+# read. Passing the schema back makes a warm read free of Spark jobs:
+# without one, each read runs a footer-reading inference job (60-85 ms warm).
+_SCANS: dict[str, tuple[tuple[int, int], StructType]] = {}
 
 # unique-ish key per fixture table for the deterministic hash respread
 _RESPREAD_KEYS: dict[str, str] = {
@@ -55,11 +60,45 @@ _RESPREAD_KEYS: dict[str, str] = {
 }
 
 
+def _stamp(path: str) -> tuple[int, int]:
+    """(st_mtime_ns, st_size) of a parquet file; for a parquet directory,
+    the newest mtime under it and the total size of its files. Raises
+    OSError when the path is missing."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime_ns, st.st_size
+    mtime, size = st.st_mtime_ns, 0
+    for dp, _, fs in os.walk(path):
+        mtime = max(mtime, os.stat(dp).st_mtime_ns)
+        for f in fs:
+            fst = os.stat(os.path.join(dp, f))
+            mtime, size = max(mtime, fst.st_mtime_ns), size + fst.st_size
+    return mtime, size
+
+
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """Read a fixed parquet input with the schema Spark inferred on its
+    first read, so only that first read (or the first after the file
+    changes) launches the inference job. The reader gets exactly the
+    schema it would infer, so results are unchanged."""
+    try:
+        stamp = _stamp(path)
+    except OSError:
+        # missing, or not a local path: Spark reads it (or raises) as is
+        return spark.read.parquet(path)
+    hit = _SCANS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCANS[path] = (stamp, df.schema)
+    return df
+
+
 def _read(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
     path = f"{sf_dir}/{table}.parquet"
-    df = spark.read.parquet(path)
+    df = _scan(spark, path)
     if not spread:
         # Aggregate-first queries collapse their input with map-side
         # partial aggregation before any shuffle, so a pre-exchange only
@@ -77,31 +116,15 @@ def _read(
     # sums, explicit tiebreakers — module docstring), so the round-robin
     # respread cannot change any result.
     par = spark.sparkContext.defaultParallelism
-    key = (sf_dir, table)
-    est = _SCAN_EST_CACHE.get(key)
-    if est is None:
-        import os
-
-        try:
-            if os.path.isdir(path):
-                size = sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _, fs in os.walk(path)
-                    for f in fs
-                )
-            else:
-                size = os.path.getsize(path)
-        except OSError:
-            size = 1 << 50
-        try:
-            mpb = _parse_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-            )
-        except ValueError:
-            mpb = 128 << 20
-        est = int(size // max(mpb, 1)) + 1
-        _SCAN_EST_CACHE[key] = est
-        _SCAN_SIZE_CACHE[key] = size
+    hit = _SCANS.get(path)
+    size = hit[0][1] if hit is not None else 1 << 50
+    try:
+        mpb = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+        )
+    except ValueError:
+        mpb = 128 << 20
+    est = int(size // max(mpb, 1)) + 1
     # Trigger only when the native split count is far below the core
     # count: a table that already splits par/4-wide (e.g. the 126 MB
     # lineitem file) loses more to a full-width exchange than it gains
@@ -112,21 +135,13 @@ def _read(
     # round-robin pays a local sort of the whole input on the (single)
     # scan task (SPARK-23207), a hash exchange does not, and a
     # deterministic key is retry-safe (guide §2.5).
-    if est < max(par // 4, 2) and _SCAN_SIZE_CACHE.get(key, 0) >= (256 << 10):
+    if est < max(par // 4, 2) and size >= (256 << 10):
         split_key = _RESPREAD_KEYS.get(table)
         if split_key is not None:
             df = df.repartition(2 * par, F.col(split_key))
         else:
             df = df.repartition(2 * par)
     return df
-
-
-def _views(spark: SparkSession, sf_dir: str) -> None:
-    for t in _TABLES:
-        # lineitem is the one fact-sized view (tpch_q1's decimal-heavy
-        # aggregation input): the respread wins there (measured 2.4s ->
-        # 2.2s); dimension views are broadcast-side and stay plain
-        _read(spark, sf_dir, t, spread=(t == "lineitem")).createOrReplaceTempView(t)
 
 
 # ---------------------------------------------------------------------------
@@ -1238,7 +1253,9 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generic aggregation parity (engine-level, deliberately raw SQL —
     there is no bespoke operator to exercise here)."""
-    _views(spark, sf_dir)
+    # lineitem is the query's one table; the respread pays at sf0.1
+    # (measured 0.82 s with it, 0.90-1.16 s without)
+    _read(spark, sf_dir, "lineitem", spread=True).createOrReplaceTempView("lineitem")
     return spark.sql(_TPCH_Q1_SQL)
 
 
@@ -4363,7 +4380,6 @@ def _scratch(prefix: str) -> str:
     root that is made on first use and removed when the process exits —
     not sooner: entries return lazy reads over these files."""
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -4388,7 +4404,7 @@ def _lib_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
 
     catalog = Catalog(spark, _scratch("wh_"))
-    df = spark.read.parquet(TRANSCRIPTS_FIXTURE)
+    df = _scan(spark, TRANSCRIPTS_FIXTURE)
     run_pipeline(spark, df, catalog, run_id="entry")
     return (
         catalog.read(AGG_TABLE)
@@ -4414,7 +4430,7 @@ def _lib_marshal_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = PipelineConfig(
         rules=routing_rules(), marshal_sinks={"errors": "sumo_ic"}
     )
-    df = spark.read.parquet(TRANSCRIPTS_FIXTURE)
+    df = _scan(spark, TRANSCRIPTS_FIXTURE)
     run_pipeline(spark, df, catalog, config=cfg, run_id="entry_marshal")
     return (
         spark.read.text(catalog.path("marshaled_errors"))
@@ -4433,7 +4449,7 @@ def _lib_template_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cardinalhq_otel_collector_spark.sources.fixtures import NEARDUP_FIXTURE
 
-    df = fingerprint_and_cluster(spark.read.parquet(NEARDUP_FIXTURE))
+    df = fingerprint_and_cluster(_scan(spark, NEARDUP_FIXTURE))
     return (
         df.groupBy("cluster_id")
         .agg(
@@ -4451,7 +4467,6 @@ def _lib_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean). The checkpoint/trigger machinery is not SQL, but its OUTPUT
     is: per-sink routed counts must equal the batch route — the oracle is
     the same route-CASE + COUNT the batch pipeline oracle uses."""
-    import os
     import shutil
 
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
@@ -4501,7 +4516,6 @@ def _replay(
     ``maxFilesPerTrigger=1`` makes each file its own microbatch — so state
     genuinely carries across the boundaries, and a watermark a frame
     raises is in force for the frames after it."""
-    import os
     import shutil
     import time
 
@@ -4540,7 +4554,7 @@ def _lib_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cardinalhq_otel_collector_spark.operators.aggregate import interval_aggregate
     from cardinalhq_otel_collector_spark.sources.fixtures import TRANSCRIPTS_FIXTURE
 
-    fixture = spark.read.parquet(TRANSCRIPTS_FIXTURE)
+    fixture = _scan(spark, TRANSCRIPTS_FIXTURE)
     max_ts = fixture.agg(F.max("ts")).collect()[0][0]
     keys_df = fixture.select("conv_id").distinct()
     sentinels = [
@@ -4886,8 +4900,6 @@ def _board() -> tuple[tuple[str, _Query, str], ...]:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the transcript pipeline (decorate → route → window agg) over
     a transcript-shaped stream derived from the sf0.001 events table."""
-    import os
-
     from pyspark.sql import Window
 
     from cardinalhq_otel_collector_spark.config import PipelineConfig
@@ -4896,7 +4908,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from cardinalhq_otel_collector_spark.plans.pipeline import decorate
 
     sf_dir = os.environ.get("SPARK_GRAFT_ENTRY_SF", "/root/testdata/sf0.001")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = _read(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     transcripts = events.select(
         F.format_string("conv-%05d", F.col("user_id")).alias("conv_id"),

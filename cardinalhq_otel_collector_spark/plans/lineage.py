@@ -19,7 +19,8 @@ Lineage rows are control-plane-sized (a handful per run — the reference
 POSTs them one HTTP request at a time, notifier.go:294-340), and routing
 them through a full Spark write job cost 3 jobs of pure driver latency
 per pipeline run — measurable serial time in the N→4N scaling account.
-Reads stay Spark (the table is queryable like any other).
+The resume check reads the same way, with pyarrow on the driver; ``read()``
+is the Spark view of the table (queryable like any other).
 """
 
 from __future__ import annotations
@@ -57,13 +58,29 @@ class LineageLog:
     def read(self) -> DataFrame:
         if not self.catalog.exists(LINEAGE_TABLE):
             return local_frame(self.catalog.spark, [], _SCHEMA)
-        return self.catalog.read(LINEAGE_TABLE)
+        return self.catalog.read(LINEAGE_TABLE, schema=_SCHEMA)
 
     def committed_stages(self, run_id: str) -> set[str]:
-        return {
-            r["stage"]
-            for r in self.read().filter(F.col("run_id") == run_id).select("stage").distinct().collect()
-        }
+        """The stages ``run_id`` committed. The parquet table is read on
+        the driver with pyarrow, as it is written: resume costs no Spark
+        job. pyarrow, like Spark, skips dot- and underscore-prefixed
+        files, so an uncommitted temp file is invisible."""
+        if self.catalog.use_iceberg:
+            return {
+                r["stage"]
+                for r in self.read().filter(F.col("run_id") == run_id)
+                .select("stage").distinct().collect()
+            }
+        if not self.catalog.exists(LINEAGE_TABLE):
+            return set()
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        keys = pa.schema([(c, pa.string()) for c in ("run_id", "stage")])
+        table = ds.dataset(
+            self.catalog.path(LINEAGE_TABLE), schema=keys, format="parquet"
+        ).to_table(columns=["stage"], filter=ds.field("run_id") == run_id)
+        return set(table.column("stage").to_pylist())
 
     def commit_many(
         self, run_id: str, stage: str, per_sink_counts: list[tuple[str | None, int]]

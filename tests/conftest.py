@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -15,6 +16,26 @@ def spark():
     s = build_spark(app_name="tests", cores=4, shuffle_partitions=8, driver_mem="4g")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` and returns how many Spark jobs it
+    launched: the jobs ``statusTracker`` files under a fresh job group,
+    read after the listener bus has drained."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

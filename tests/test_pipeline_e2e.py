@@ -299,6 +299,22 @@ def test_lineage_commit_survives_crashed_partial_write(spark, warehouse):
     assert dict(lineage.read().dtypes)["committed_at"] == "timestamp"
 
 
+def test_resume_check_launches_no_spark_job(spark, spark_jobs, warehouse):
+    """committed_stages reads _lineage on the driver, as commit_many
+    writes it: a resume check costs no Spark job, and sees only the
+    asked run's stages (none before the table exists)."""
+    lineage = LineageLog(warehouse)
+    assert lineage.committed_stages("r1") == set()
+    lineage.commit_many("r1", "routed_write", [("errors", 3), ("default", 5)])
+    lineage.commit_many("r1", "clusters_write", [(None, 2)])
+    lineage.commit_many("r2", "aggregates_write", [(None, 1)])
+    got: list[set[str]] = []
+    assert spark_jobs(lambda: got.append(lineage.committed_stages("r1"))) == 0
+    assert got == [{"routed_write", "clusters_write"}]
+    # the counter does see jobs: the Spark view of the same table runs one
+    assert spark_jobs(lambda: lineage.read().collect()) > 0
+
+
 def test_marshal_sink_stage_e2e(spark, transcripts_df, tmp_path):
     """S6m sink-boundary marshal (exporter.go:48-66 marshal→partition→
     upload): each configured sink's routed facts are rendered in its wire

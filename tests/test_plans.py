@@ -10,8 +10,9 @@ actual executed plans (SURVEY.md §4):
   * partitioned reads prune to one sink directory
 
 plus source gates on the streaming code and the entry module: one
-replay harness, one board table, one scratch owner, and no pandas state
-machine that re-implements the native watermarked interval aggregate.
+replay harness, one board table, one scratch owner, one reader for the
+fixed parquet inputs, and no pandas state machine that re-implements the
+native watermarked interval aggregate.
 """
 
 import ast
@@ -166,6 +167,40 @@ def test_entry_board_and_scratch_declared_in_one_place():
     for d in (n for n in ast.walk(tree) if isinstance(n, ast.Dict)):
         keys = {k.value for k in d.keys if isinstance(k, ast.Constant)}
         assert len(keys & names) <= 20, sorted(keys & names)[:5]
+
+
+def test_entry_fixed_inputs_read_through_scan():
+    """Every read of a fixed parquet input in the entry module — an
+    ``sf_dir`` table or a ``*_FIXTURE`` file — goes through ``_scan``, which
+    passes the cached schema so a warm read launches no inference job.
+    Reads of output an entry has just written stay plain reads."""
+    import __spark_entry__ as entry
+
+    def fixed(arg: ast.expr) -> bool:
+        names = {n.id for n in ast.walk(arg) if isinstance(n, ast.Name)}
+        return (isinstance(arg, ast.JoinedStr) and "sf_dir" in names) or (
+            isinstance(arg, ast.Name) and arg.id.endswith("_FIXTURE")
+        )
+
+    tree = ast.parse(pathlib.Path(entry.__file__).read_text())
+    outside = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef) or fn.name == "_scan":
+            continue
+        for n in ast.walk(fn):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+                and "read" in ast.unparse(n.func.value)
+                and any(fixed(a) for a in n.args)
+            ):
+                outside.append(f"{fn.name}:{n.lineno}")
+    assert not outside, outside
+    assert sum(
+        isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_scan"
+        for n in ast.walk(tree)
+    ) >= 5  # _read plus the four fixture entries
 
 
 def test_entry_scratch_is_removed_at_exit():
